@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """DuckDB wall time for qds_channel_rollup over a bench fixture —
-the oracle side of tools/ChannelLedger (same query text as the gate,
-threads matched to the Spark session's local[32])."""
+the oracle side of BASELINE's round-15 channel ledger (same query text
+as the gate, threads matched to the Spark session's local[32])."""
 import sys, time, duckdb
 
 sf = sys.argv[1] if len(sys.argv) > 1 else "benchdata/sf100"

@@ -34,9 +34,6 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    // r17: the probe cache defaults ON for users; the bench stays the
-    // explicit COLD arm unless a session opts into warm (=1)
-    graft.plans.ProbeAgg.pinColdUnlessRequested()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // marginal-cost protocol: a sub-second local[32] run mostly measures
     // fixed job/stage overhead, which a cluster amortizes away. With a
@@ -45,92 +42,7 @@ object Bench {
     // actually scales. Opt out with SPARK_GRAFT_SF_BASE_DIR=none.
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_BASE_DIR",
       "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    // single-JVM local mode: shuffle bytes never cross a network, so lz4
-    // on the shuffle path is pure CPU overhead and a tmpfs shuffle dir
-    // skips the disk — but tmpfs pages ARE RAM, and shuffle files live
-    // until their stage's lineage is GC'd, so a long bench session
-    // accumulates them: at sf10 (0.7 GB parquet) the uncompressed
-    // session total hit 112 GB and the kernel OOM-killed the JVM. Both
-    // tricks therefore engage only below a parquet-size cutoff; bigger
-    // fixtures keep compression and spill to real disk, exactly as a
-    // cluster deployment would. Override: SPARK_GRAFT_TMPFS=0.
-    val sfBytes = {
-      def du(p: java.io.File): Long =
-        if (p.isFile) p.length
-        else Option(p.listFiles).map(_.map(du).sum).getOrElse(0L)
-      du(new java.io.File(sfDir))
-    }
-    val small = sfBytes < (200L << 20) // sf1 ≈ 75 MB in, sf10 ≈ 0.7 GB
-    // big-fixture shuffle-file hygiene: within an interleaved round every
-    // query's shuffle files coexist on the ONE local SSD until their
-    // ShuffleDependency objects are GC'd AND the async ContextCleaner
-    // drains — at sf100 that is tens of GB of dead files competing with
-    // the live query for disk bandwidth (the r10 in-suite artifact: q3
-    // 92.5 s in-suite vs 22.9 s solo). Between queries we force the GC
-    // and drain the cleaner OUTSIDE the timed window; a real cluster
-    // spreads this term across per-node disks, so removing it here makes
-    // the single-box number MORE representative, not less.
-    // shuffle-file hygiene engages only at sf100-class fixtures: the
-    // blocking cleaner + per-query GC/drain exist for the multi-GB dead-
-    // shuffle pile-up that contended the one SSD at sf100 (r10 artifact);
-    // sf10's 1.7 GB fixture never showed it, and the r10 sf10 numbers —
-    // the round-10 closing band — were measured WITHOUT hygiene. Keeping
-    // the r11 hygiene on at sf10 is the round-12 A/B's prime suspect for
-    // the 25-40% uniform sf10 inflation r11 attributed to box state.
-    // Override: SPARK_GRAFT_HYGIENE_MIN_MB.
-    val hygieneMinBytes = sys.env.getOrElse("SPARK_GRAFT_HYGIENE_MIN_MB",
-      "4096").toLong << 20
-    val hygiene = sfBytes >= hygieneMinBytes
-    // Disk-regime join policy (the generalization of the round-11 yoy
-    // fix): in the sf100-class regime, AQE's SMJ→SHJ conversion is a
-    // fatal-abort class — a converted build that cannot acquire memory
-    // under concurrent pressure THROWS ("can't acquire N bytes to build
-    // hash relation") where the sort-merge it replaced would have
-    // spilled. This exposure is data-dependent and shared by every join
-    // that can dispatch past the reduce bound (ProbeAgg fallback arms,
-    // Dedup.components edge joins, the bucketed build), so the policy is
-    // central, not per-query hints: big fixtures disable the conversion
-    // (threshold 0) and pay sort CPU for abort-freedom — the same trade
-    // the reference's engine makes by always owning a spill path. Below
-    // the cutoff, the conversion's measured ~10% win on sf10 join
-    // queries stands (q5's lineitem⋈orders skips sorting 60M rows).
-    builder.config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD",
-        if (hygiene) "64m" else "256m"))
-    val shuffleDirRequested =
-      if (small || !hygiene) None
-      else {
-        builder.config("spark.cleaner.referenceTracking.blocking.shuffle",
-          "true")
-        // PID-suffixed: two concurrent bench processes must not share a
-        // spark.local.dir (each would drain the other's measurements)
-        val d = s"${System.getProperty("java.io.tmpdir")}/graft-bench-" +
-          s"shuffle-${ProcessHandle.current().pid()}"
-        builder.config("spark.local.dir", d)
-        Some(java.nio.file.Paths.get(d))
-      }
-    if (small) {
-      builder.config("spark.shuffle.compress", "false")
-      builder.config("spark.shuffle.spill.compress", "false")
-      if (sys.env.getOrElse("SPARK_GRAFT_TMPFS", "1") == "1" &&
-          java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm")))
-        builder.config("spark.local.dir", "/dev/shm/graft-bench")
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // getOrCreate silently ignores builder configs when a session already
-    // exists in this JVM — in that case the dir we'd poll is NOT the dir
-    // Spark shuffles into, so drop the drain rather than measure noise
-    val shuffleDir = shuffleDirRequested.filter(d =>
-      spark.sparkContext.getConf.getOption("spark.local.dir")
-        .contains(d.toString))
+    val Session(spark, sfBytes, small, hygiene, shuffleDir) = session(sfDir)
 
     /** Big fixtures only: GC (enqueues dead shuffles to the cleaner,
       * whose shuffle removes are blocking per the conf above) and poll
@@ -631,5 +543,111 @@ object Bench {
       .map { case (m, _) => f""","calibration":$m%.3f""" }.getOrElse("")
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","reps":$reps,"sf":"$sfDir","totals":$totalsJson,"queries":$qs$spQs$calTrailer$layoutJson}""")
     spark.stop()
+  }
+
+  /** Worker threads, and shuffle partitions, of a bench-posture session. */
+  val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+  /** A bench-posture session plus the fixture-size facts its posture was
+    * derived from (the bench's later sections key off the same facts). */
+  final case class Session(spark: SparkSession, sfBytes: Long,
+      small: Boolean, hygiene: Boolean,
+      shuffleDir: Option[java.nio.file.Path])
+
+  /** The bench's session posture for the fixture at `sfDir`, in ONE place.
+    * The mains under tools/ build their session here too, so the plans
+    * they time or dump are the benched plans. `confs` apply last, over
+    * the posture. */
+  def session(sfDir: String, confs: Seq[(String, String)] = Nil): Session = {
+    // r17: the probe cache defaults ON for users; the bench stays the
+    // explicit COLD arm unless a session opts into warm (=1)
+    graft.plans.ProbeAgg.pinColdUnlessRequested()
+    val builder = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+    // single-JVM local mode: shuffle bytes never cross a network, so lz4
+    // on the shuffle path is pure CPU overhead and a tmpfs shuffle dir
+    // skips the disk — but tmpfs pages ARE RAM, and shuffle files live
+    // until their stage's lineage is GC'd, so a long bench session
+    // accumulates them: at sf10 (0.7 GB parquet) the uncompressed
+    // session total hit 112 GB and the kernel OOM-killed the JVM. Both
+    // tricks therefore engage only below a parquet-size cutoff; bigger
+    // fixtures keep compression and spill to real disk, exactly as a
+    // cluster deployment would. Override: SPARK_GRAFT_TMPFS=0.
+    val sfBytes = {
+      def du(p: java.io.File): Long =
+        if (p.isFile) p.length
+        else Option(p.listFiles).map(_.map(du).sum).getOrElse(0L)
+      du(new java.io.File(sfDir))
+    }
+    val small = sfBytes < (200L << 20) // sf1 ≈ 75 MB in, sf10 ≈ 0.7 GB
+    // big-fixture shuffle-file hygiene: within an interleaved round every
+    // query's shuffle files coexist on the ONE local SSD until their
+    // ShuffleDependency objects are GC'd AND the async ContextCleaner
+    // drains — at sf100 that is tens of GB of dead files competing with
+    // the live query for disk bandwidth (the r10 in-suite artifact: q3
+    // 92.5 s in-suite vs 22.9 s solo). Between queries we force the GC
+    // and drain the cleaner OUTSIDE the timed window; a real cluster
+    // spreads this term across per-node disks, so removing it here makes
+    // the single-box number MORE representative, not less.
+    // shuffle-file hygiene engages only at sf100-class fixtures: the
+    // blocking cleaner + per-query GC/drain exist for the multi-GB dead-
+    // shuffle pile-up that contended the one SSD at sf100 (r10 artifact);
+    // sf10's 1.7 GB fixture never showed it, and the r10 sf10 numbers —
+    // the round-10 closing band — were measured WITHOUT hygiene. Keeping
+    // the r11 hygiene on at sf10 is the round-12 A/B's prime suspect for
+    // the 25-40% uniform sf10 inflation r11 attributed to box state.
+    // Override: SPARK_GRAFT_HYGIENE_MIN_MB.
+    val hygieneMinBytes = sys.env.getOrElse("SPARK_GRAFT_HYGIENE_MIN_MB",
+      "4096").toLong << 20
+    val hygiene = sfBytes >= hygieneMinBytes
+    // Disk-regime join policy (the generalization of the round-11 yoy
+    // fix): in the sf100-class regime, AQE's SMJ→SHJ conversion is a
+    // fatal-abort class — a converted build that cannot acquire memory
+    // under concurrent pressure THROWS ("can't acquire N bytes to build
+    // hash relation") where the sort-merge it replaced would have
+    // spilled. This exposure is data-dependent and shared by every join
+    // that can dispatch past the reduce bound (ProbeAgg fallback arms,
+    // Dedup.components edge joins, the bucketed build), so the policy is
+    // central, not per-query hints: big fixtures disable the conversion
+    // (threshold 0) and pay sort CPU for abort-freedom — the same trade
+    // the reference's engine makes by always owning a spill path. Below
+    // the cutoff, the conversion's measured ~10% win on sf10 join
+    // queries stands (q5's lineitem⋈orders skips sorting 60M rows).
+    builder.config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
+      sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD",
+        if (hygiene) "64m" else "256m"))
+    val shuffleDirRequested =
+      if (small || !hygiene) None
+      else {
+        builder.config("spark.cleaner.referenceTracking.blocking.shuffle",
+          "true")
+        // PID-suffixed: two concurrent bench processes must not share a
+        // spark.local.dir (each would drain the other's measurements)
+        val d = s"${System.getProperty("java.io.tmpdir")}/graft-bench-" +
+          s"shuffle-${ProcessHandle.current().pid()}"
+        builder.config("spark.local.dir", d)
+        Some(java.nio.file.Paths.get(d))
+      }
+    if (small) {
+      builder.config("spark.shuffle.compress", "false")
+      builder.config("spark.shuffle.spill.compress", "false")
+      if (sys.env.getOrElse("SPARK_GRAFT_TMPFS", "1") == "1" &&
+          java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm")))
+        builder.config("spark.local.dir", "/dev/shm/graft-bench")
+    }
+    confs.foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    // getOrCreate silently ignores builder configs when a session already
+    // exists in this JVM — in that case the dir we'd poll is NOT the dir
+    // Spark shuffles into, so drop the drain rather than measure noise
+    val shuffleDir = shuffleDirRequested.filter(d =>
+      spark.sparkContext.getConf.getOption("spark.local.dir")
+        .contains(d.toString))
+    Session(spark, sfBytes, small, hygiene, shuffleDir)
   }
 }

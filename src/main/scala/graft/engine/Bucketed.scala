@@ -56,7 +56,8 @@ object Bucketed {
       .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
       .sortBy(sorted.head, sorted.tail: _*)
       .option("path", path)
-      // hot-layout codec: a measured sf10 A/B (tools/ScanFloor2) decodes
+      // hot-layout codec: a measured sf10 A/B (BASELINE round 14,
+      // "One lever found and shipped") decodes
       // the 4-column lineitem scan in 0.30 s uncompressed vs 0.46-0.60
       // snappy — on local NVMe the layout trades disk for decode, the
       // classic hot-tier posture; object-store deployments keep snappy
@@ -379,7 +380,8 @@ object Bucketed {
       // per-bucket merges are independent single-bucket jobs (each a
       // coalesce(1) sort of ONE bucket's rows): run the round's batch
       // concurrently — a serial loop leaves 31 cores idle and makes a
-      // merge round ~8× the per-bucket cost (tools/IncBucketizeLedger)
+      // merge round ~8× the per-bucket cost (BASELINE "Round-12
+      // amortized-cost ledger: incremental bucketize")
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration.Duration

@@ -469,7 +469,9 @@ object Engine {
       result.select(outCols: _*)
     }
     val rewritten =
-      if (rewrite.isEmpty) Nil else rewriteGroups(tbl, rewrite, applyMerge)
+      if (rewrite.isEmpty) Nil
+      else rewriteGroups(tbl, rewrite, applyMerge,
+        if (whenMatchedDelete) Nil else updCols)
 
     // not-matched inserts: source rows whose key appears in no candidate
     // file (files outside the range prune cannot match, so candidate
@@ -802,19 +804,26 @@ object Engine {
       df.select(updated: _*)
     }
     val newFiles =
-      if (rewrite.isEmpty) Nil else rewriteGroups(tbl, rewrite, applyUpd)
+      if (rewrite.isEmpty) Nil
+      else rewriteGroups(tbl, rewrite, applyUpd, assignments.keys)
     commitSnapshot(tbl, "update", rewrite.map(_.path).toSet, newFiles)
     DmlResult(rewrite.size, 0, untouched.size, matches.values.sum)
   }
 
   /** Rewrite a set of files partition-group by partition-group so the new
-    * files carry the right partition values. */
+    * files carry the right partition values. A rewrite that `assigned` a
+    * partition spec's source column can move rows between partitions, so
+    * it goes through [[writeFiles]], which derives each row's partition —
+    * the reference's delete+reinsert UPDATE (writes.md:15-37). */
   private def rewriteGroups(tbl: LakeTable, files: List[DataFile],
-      f: DataFrame => DataFrame): List[DataFile] = {
-    files.groupBy(_.partition).toList.flatMap { case (partition, group) =>
-      val df = tbl.spark.read.schema(tbl.schema)
-        .parquet(group.map(_.path): _*)
-      writeRaw(tbl, f(df), partition)
+      f: DataFrame => DataFrame,
+      assigned: Iterable[String] = Nil): List[DataFile] = {
+    def read(fs: List[DataFile]) =
+      tbl.spark.read.schema(tbl.schema).parquet(fs.map(_.path): _*)
+    lazy val sourceCols = tbl.meta.partitionSpec.map(_.column).toSet
+    if (assigned.exists(c => sourceCols(c))) writeFiles(tbl, f(read(files)))
+    else files.groupBy(_.partition).toList.flatMap {
+      case (partition, group) => writeRaw(tbl, f(read(group)), partition)
     }
   }
 

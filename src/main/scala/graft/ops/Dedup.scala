@@ -143,7 +143,7 @@ object Dedup {
     val mode = spark.conf
       .get("spark.graft.minhash.clusteredVerify", "auto")
     // Dispatch, settled by measurement across two decades
-    // (tools/MinhashLedger):
+    // (BASELINE "Round 10: q_dedup_minhash ledgered"):
     //  - sf10 (500k docs / 30.8M surviving pairs): pair-join 44.0 s vs
     //    clustered 63.2 s — the join path is whole-stage-codegen'd end
     //    to end and its array shuffle compresses well, so it wins while
@@ -164,10 +164,10 @@ object Dedup {
   }
 
   /** The minhash pipeline's staged internals — one object so the
-    * benchmark ledger (tools/MinhashLedger) times the REAL stages and
-    * the auto-dispatch above composes them without recomputation.
-    * `sh`/`sig` branch off one cached signature table; `est` is the
-    * post-banding, post-estimate candidate list. */
+    * stage ledgers (BASELINE round 10 and round-18 addendum 3) time
+    * the REAL stages and the auto-dispatch above composes them without
+    * recomputation. `sh`/`sig` branch off one cached signature table;
+    * `est` is the post-banding, post-estimate candidate list. */
   private[graft] final case class MinhashPlan(sig: DataFrame,
       sh: DataFrame, nDocs: Long, nBands: Int, big: Boolean,
       cand: DataFrame, est: DataFrame)
@@ -239,25 +239,17 @@ object Dedup {
     // and the cross-band dropDuplicates is unchanged. Enumeration
     // streams per LEFT element (explode of a slice), so per-row memory
     // is O(bucket), not O(bucket²) — a mega-bucket degrades exactly
-    // like the join's colocated probe did. Escape hatch:
-    // spark.graft.minhash.candPath=join restores the self-join.
-    val candPath = df.sparkSession.conf
-      .get("spark.graft.minhash.candPath", "group")
-    val cand = (if (candPath == "join") {
-      val a = banded.select(col("band"), col("bhash"), col("id").as("id_a"))
-      val b = banded.select(col("band"), col("bhash"), col("id").as("id_b"))
-      a.join(shj(b), Seq("band", "bhash"))
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b")
-    } else {
-      banded.groupBy("band", "bhash")
-        .agg(sort_array(collect_list(col("id"))).as("ids"))
-        .filter(size(col("ids")) >= 2)
-        .select(posexplode(col("ids")).as(Seq("i", "id_a")), col("ids"))
-        .select(col("id_a"),
-          explode(slice(col("ids"), col("i") + lit(2), size(col("ids"))))
-            .as("id_b"))
-    }).dropDuplicates("id_a", "id_b")
+    // like the join's colocated probe did. Measured: the candidate
+    // stage is 14% cheaper than the self-join at sf0.1 and 23% at sf10
+    // (BASELINE round-18 addendum 3, OPTIMIZATION_r18 §2).
+    val cand = banded.groupBy("band", "bhash")
+      .agg(sort_array(collect_list(col("id"))).as("ids"))
+      .filter(size(col("ids")) >= 2)
+      .select(posexplode(col("ids")).as(Seq("i", "id_a")), col("ids"))
+      .select(col("id_a"),
+        explode(slice(col("ids"), col("i") + lit(2), size(col("ids"))))
+          .as("id_b"))
+      .dropDuplicates("id_a", "id_b")
     // two-stage verification: (1) cheap signature-agreement estimate of
     // jaccard (64 longs per side) discards most false candidates, (2)
     // exact jaccard on the full shingle sets only for survivors.
@@ -841,11 +833,6 @@ object Dedup {
     // O(distinct ids per partition). Guarded like every broadcast here.
     val nNodes = labels.count() // labels are checkpointed; count is cheap
     val bcastLabels = nNodes * 48L < Runtime.getRuntime.maxMemory / 24
-    // operational round timing (spark.graft.components.verbose=true):
-    // the scale ledger attributes the label-prop share of the clustered
-    // verify to ROUNDS × per-round edge scans — this prints both terms
-    val verbose = pairs.sparkSession.conf
-      .get("spark.graft.components.verbose", "false") == "true"
     var converged = false
     var it = 0
     while (!converged) {
@@ -853,7 +840,6 @@ object Dedup {
         s"Dedup.components: no convergence after $maxIters rounds — " +
           "the pair graph has a longer diameter than a duplicate " +
           "cluster should; inspect the pair generator's threshold")
-      val t0 = System.nanoTime()
       // NOTE pointer jumping (lbl := lbl(lbl) per round) was measured
       // at sf100 and NETS ZERO here: it cut rounds 10 → 8 but each
       // round pays an extra node-sized checkpoint+join (169.6 s vs
@@ -878,9 +864,6 @@ object Dedup {
       labels = next
       converged = changed == 0L
       it += 1
-      if (verbose)
-        println(f"[components] round $it%2d  ${(System.nanoTime() - t0) / 1e9}%7.2f s" +
-          (if (converged) "  (converged)" else ""))
     }
     labels.select(col("id").as(idCol), col("lbl").as(out))
   }

@@ -141,19 +141,13 @@ object LayoutDispatch extends Rule[LogicalPlan] {
     }
 
     val spark = SparkSession.active
-    val verbose =
-      spark.conf.getOption("spark.graft.layout.verbose").contains("true")
     plan.transform {
       case lr: LogicalRelation if baseOf(lr).isDefined =>
         val demand = wanted(lr)
         baseOf(lr).flatMap { base =>
-          val pick = registry.get(base)
+          registry.get(base)
             .find(l => l.keys.nonEmpty && l.keys.forall(demand.contains))
-          val sub = pick.flatMap(substitute(spark, lr, _))
-          if (verbose) System.err.println(
-            s"[layout] base=$base demand=${demand.mkString(",")} " +
-              s"pick=${pick.map(_.table)} substituted=${sub.isDefined}")
-          sub
+            .flatMap(substitute(spark, lr, _))
         }.getOrElse(lr)
     }
   }

@@ -274,9 +274,6 @@ final case class LowCardPreAggExec(keys: Seq[String],
     val nSums = sums.length
     val mg = maxGroups
 
-    if (System.getenv("GRAFT_COLAGG_DEBUG") == "1")
-      println(s"[colagg-dbg] columnar=" +
-        colPlan.map(_.getClass.getSimpleName))
     colPlan match {
       case Some(scan) =>
         scan.executeColumnar().mapPartitions { batches =>
@@ -392,9 +389,6 @@ final case class LowCardPreAggExec(keys: Seq[String],
       nKeys: Int, nSums: Int, maxGroups: Int): Iterator[InternalRow] = {
     val groups = new Groups(nKeys, nSums, maxGroups)
     val nSlots = numOrds.length
-    val dbg = System.getenv("GRAFT_COLAGG_DEBUG") == "1"
-    var tDecode = 0L; var tFilter = 0L; var tKey = 0L; var tAcc = 0L
-    var nBatches = 0L; var nRows = 0L
     val keyBuf = new Array[UTF8String](nKeys)
     val comboIds = new Array[Long](4 * maxGroups)
     val comboGids = new Array[Int](4 * maxGroups)
@@ -412,15 +406,12 @@ final case class LowCardPreAggExec(keys: Seq[String],
           cols = Array.fill(nSlots)(new Array[Double](n))
           masks = Array.fill(nSlots)(new Array[Boolean](n))
         }
-        nBatches += 1; nRows += n
-        var t0 = if (dbg) System.nanoTime() else 0L
         var s = 0
         while (s < nSlots) {
           decodeSlot(batch.column(numOrds(s)), slotKinds(s), n, cols(s),
             masks(s))
           s += 1
         }
-        if (dbg) { val t = System.nanoTime(); tDecode += t - t0; t0 = t }
         // filter mask. Spark comparison semantics: NULL fails every
         // predicate; NaN orders ABOVE every other double, so a NaN
         // value passes ge/gt and fails le/lt — Java's plain
@@ -449,7 +440,6 @@ final case class LowCardPreAggExec(keys: Seq[String],
           }
           f += 1
         }
-        if (dbg) { val t = System.nanoTime(); tFilter += t - t0; t0 = t }
         // key index per row. Fast path: when every key column is
         // dictionary-encoded, a key tuple is identified by its packed
         // dictionary ids — an int read per column instead of a string
@@ -540,7 +530,6 @@ final case class LowCardPreAggExec(keys: Seq[String],
             i += 1
           }
         }
-        if (dbg) { val t = System.nanoTime(); tKey += t - t0; t0 = t }
         // accumulate each sum over the kept rows; unrolled fast paths
         // for the common 1- and 2-term products keep the loop tight.
         // SQL semantics: a product with ANY null term is null → the
@@ -622,12 +611,8 @@ final case class LowCardPreAggExec(keys: Seq[String],
           if (keep(i)) groups.cnts(kidx(i)) += 1
           i += 1
         }
-        if (dbg) { val t = System.nanoTime(); tAcc += t - t0 }
       }
     }
-    if (dbg) println(f"[colagg-dbg] batches=$nBatches rows=$nRows " +
-      f"decode=${tDecode / 1e6}%.0fms filter=${tFilter / 1e6}%.0fms " +
-      f"key=${tKey / 1e6}%.0fms acc=${tAcc / 1e6}%.0fms")
     groups.rows(nSums)
   }
 

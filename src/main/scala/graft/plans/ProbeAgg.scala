@@ -77,7 +77,7 @@ object ProbeAgg {
       .orElse(sys.env.get("SPARK_GRAFT_PROBE_CACHE")).contains("0")
 
   /** Measurement-harness posture pin: the production default is ON
-    * (r17), but BENCH_rN and the tools/ ledgers keep reporting the
+    * (r17), but BENCH_rN and the BASELINE ledgers keep reporting the
     * COLD (rebuild-every-rep) arm unless a session explicitly opts
     * into warm via SPARK_GRAFT_PROBE_CACHE=1 — round-over-round
     * comparability and honest rebuild cost. Call from a harness main
@@ -757,9 +757,6 @@ final case class ProbePreAggExec(factCols: Seq[String],
     var gColBuf: Array[Long] = new Array[Long](0)
     val localMaps = ProbeAgg.forceMaps(maps)
     val strTargets = strFs.map(f => UTF8String.fromString(f._2))
-    val dbg = System.getenv("GRAFT_PROBEAGG_DEBUG") == "1"
-    var tDecode = 0L; var tFilter = 0L; var tProbe = 0L; var tAcc = 0L
-    var nRows = 0L
     var cols: Array[Array[Double]] = Array.fill(nSlots)(new Array[Double](0))
     var masks: Array[Array[Boolean]] = Array.fill(nSlots)(new Array[Boolean](0))
     var keyBufs: Array[Array[Long]] = Array.fill(nProbes)(new Array[Long](0))
@@ -780,8 +777,6 @@ final case class ProbePreAggExec(factCols: Seq[String],
           vals = Array.fill(nProbes)(new Array[Long](n))
           if (gColOrd >= 0) gColBuf = new Array[Long](n)
         }
-        nRows += n
-        var t0 = if (dbg) System.nanoTime() else 0L
         var s = 0
         while (s < nSlots) {
           decodeNum(batch.column(numOrds(s)), slotKinds(s), n, cols(s),
@@ -797,7 +792,6 @@ final case class ProbePreAggExec(factCols: Seq[String],
         // Groups.idOf — a null GROUP key must fail loudly, not drop
         if (gColOrd >= 0)
           decodeKey(batch.column(gColOrd), gColLong, n, gColBuf)
-        if (dbg) { val t = System.nanoTime(); tDecode += t - t0; t0 = t }
         java.util.Arrays.fill(keep, 0, n, true)
         // numeric filters — same NULL/NaN semantics as LowCardAgg
         var f = 0
@@ -864,7 +858,6 @@ final case class ProbePreAggExec(factCols: Seq[String],
           }
           f += 1
         }
-        if (dbg) { val t = System.nanoTime(); tFilter += t - t0; t0 = t }
         // probes: miss (or null key) drops the row
         p = 0
         while (p < nProbes) {
@@ -890,7 +883,6 @@ final case class ProbePreAggExec(factCols: Seq[String],
             i += 1
           }
         }
-        if (dbg) { val t = System.nanoTime(); tProbe += t - t0; t0 = t }
         val gvals =
           if (groupIdx >= 0) vals(groupIdx)
           else if (gColOrd >= 0) gColBuf
@@ -968,12 +960,8 @@ final case class ProbePreAggExec(factCols: Seq[String],
           }
           s += 1
         }
-        if (dbg) { val t = System.nanoTime(); tAcc += t - t0 }
       }
     }
-    if (dbg) println(f"[probeagg-dbg] rows=$nRows groups=${groups.n} " +
-      f"decode=${tDecode / 1e6}%.0fms filter=${tFilter / 1e6}%.0fms " +
-      f"probe=${tProbe / 1e6}%.0fms acc=${tAcc / 1e6}%.0fms")
     groups.rows(nSums)
   }
 

@@ -25,7 +25,7 @@ object Q {
     * and sort in-partition — skipping the RangePartitioner SAMPLING
     * JOB, which re-executes every narrow operator above the last
     * shuffle once more per query (the whole Window chain for the
-    * window gates; measured via tools/OrderByAB at sf0.1:
+    * window gates; measured at sf0.1 in commit 70a53c4:
     * sessionize 0.384→0.278 s, rank 0.410→0.313 s) — while results
     * whose optimizer size estimate crosses the bound keep the
     * scale-correct parallel range sort (measured at sf10: the

@@ -19,7 +19,7 @@ object QPipe {
 
   /** Plane sets for the embed near-dup gate query (dim 64, 6 bits, 8
     * tables, double-sided 1-bit multiprobe): recall on the fixture's 60
-    * qualifying pairs is 1.0 with margin (tools/EmbedProfile sweep:
+    * qualifying pairs is 1.0 with margin (commit 6d58f14 sweep:
     * 6-bit/8-table misses 0, 8-bit/8-table misses 4 — the run is
     * deterministic), so the LSH path's output EQUALS the brute-force
     * all-pairs oracle while shuffling only (table, bucket, id). */
@@ -1209,15 +1209,18 @@ object QPipe {
         |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
         |GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin,
 
+    // DuckDB's array_to_string of an EMPTY list is NULL (Spark's
+    // array_join gives ''), so an empty or whitespace-only document needs
+    // the coalesce to read 0 tokens and md5('') on both engines
     "q_text_bpe" -> {
       s"""WITH toks AS (
          |  SELECT doc_id,
-         |    array_to_string(list_transform(
+         |    coalesce(array_to_string(list_transform(
          |      list_filter(
          |        str_split(lower(trim(regexp_replace(text, '\\s+', ' ',
          |          'g'))), ' '),
          |        w -> w <> ''),
-         |      w -> ${bpeChainSql("w")}), ' ') AS stream
+         |      w -> ${bpeChainSql("w")}), ' '), '') AS stream
          |  FROM documents)
          |SELECT doc_id,
          |  CAST(CASE WHEN stream = '' THEN 0

@@ -49,7 +49,8 @@ object QTpcds {
         withinReduceBound(c.select("c_custkey", "c_nationkey"))) {
       // ProbeAgg kernel: probe VALUE = nationkey·10⁴ + order year, so
       // the (nation, year) revenue matrix (175 groups) accumulates in
-      // the fact's scan pass — sf10: 4.92 → 0.96 s (tools/ProbeAggAB);
+      // the fact's scan pass — sf10: 4.92 → 0.96 s (BASELINE round 8
+      // ProbeAgg ledger);
       // the lag window then runs on 175 rows
       val cN = c.join(broadcast(t("nation")
           .select("n_nationkey", "n_name")),
@@ -103,7 +104,8 @@ object QTpcds {
       // 106.5 → 45.6 s (tools/QueryOne). The size dial keeps smaller
       // fixtures on the join form the oracle gate exercises; in
       // practice the kernel arm owns everything within the probe-map
-      // bound anyway (sf10 included — tools/YoyProbe). Sum-of-sums
+      // bound anyway (sf10 included — BASELINE "Round-10 follow-up:
+      // the qds_yoy sf100 arm"). Sum-of-sums
       // re-associates float addition, so a rounded cent can move where
       // a .xx5 boundary flips (one group at sf0.01; PlanSpec pins
       // cent-exactness — the finest-first-rollup deviation class); the
@@ -190,8 +192,8 @@ object QTpcds {
   // Q5/Q77 shape: per-channel revenue union → rollup with grand total.
   // Channels are proxied by order priority classes. The FROM clause
   // leads with the FACT (lineitem ⋈ orders first, dims after):
-  // tools/ChannelRollupAB measured both left-deep orders at
-  // sf0.1/sf1/sf10 and fact-first won every scale (0.67 vs 0.93 /
+  // BASELINE "qds_channel_rollup join order" measured both left-deep
+  // orders at sf0.1/sf1/sf10 and fact-first won every scale (0.67 vs 0.93 /
   // 1.27 vs 1.71 / 4.25 vs 5.50 s median) — the dims-first build-up
   // shuffles orders on custkey AND its join output on orderkey, while
   // fact-first pays one orderkey co-shuffle and then broadcasts the
@@ -481,7 +483,8 @@ object QTpcds {
         // ProbeAgg kernel: (channel, nation) dictionary-coded into the
         // probe VALUE (6 combos), the fact's batches probe once and
         // accumulate the 6-group sums — sf10: 3.10 → 0.90 s
-        // (tools/ProbeAggAB); decode is a 6-row broadcast join
+        // (BASELINE round 8 ProbeAgg ledger); decode is a 6-row
+        // broadcast join
         val cN = c.join(broadcast(n3),
             col("c_nationkey") === col("n_nationkey"))
           .select(col("c_custkey"), col("n_name").as("nation"))

@@ -155,7 +155,8 @@ object QTpch {
     // broadcasts into lineitem, so the FACT NEVER SHUFFLES; supplier
     // (always broadcast-sized) closes the (suppkey, nationkey) edge.
     // This is the hash-build pipeline DuckDB runs in shared memory.
-    // Measured (tools/Q5Ledger, sf10, interleaved medians): declared
+    // Measured (BASELINE round 8 join-core sweep, sf10, interleaved
+    // medians): declared
     // left-deep 4.94 s, this 1.91 s, pre-aggregated lineitem 15.7 s;
     // answers verified identical. Both data-dependent broadcasts are
     // scale-guarded by scan-derived bounds (JoinOpt.broadcastIfBounded):
@@ -194,7 +195,8 @@ object QTpch {
         // columnar probe+aggregate fusion (plans/ProbeAgg): the fact's
         // batches probe the two reduced maps and accumulate the 5-group
         // sums directly — sf10: 2.96 s (BHJ chain) → 0.56 s, 0.9× the
-        // oracle engine (tools/ProbeAggAB, answers asserted identical)
+        // oracle engine (BASELINE round 8 ProbeAgg ledger, answers
+        // asserted identical)
         ProbeAgg.probeSums(t(s, dir, "lineitem"),
             Seq(Probe("l_orderkey", oc, "o_orderkey", "c_nationkey"),
               Probe("l_suppkey", supProj, "s_suppkey", "s_nationkey")),
@@ -268,7 +270,8 @@ object QTpch {
         if (withinReduceBound(bound))
           // ProbeAgg kernel: the R-filter and the quarter-orders probe
           // run on the scan's vectors, custkey-grouped sums accumulate
-          // in the same pass — sf10: 3.22 → 1.09 s (tools/ProbeAggAB)
+          // in the same pass — sf10: 3.22 → 1.09 s (BASELINE round 8
+          // ProbeAgg ledger)
           ProbeAgg.probeSums(t(s, dir, "lineitem"),
               Seq(Probe("l_orderkey", o.select("o_orderkey", "o_custkey"),
                 "o_orderkey", "o_custkey")),

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Train BPE merges on a fixture's documents table and print them as a
   * Scala literal — the source of the hardcoded merge list in the
   * q_text_bpe gate (a tokenizer is a fixed artifact; the gate applies
@@ -15,10 +13,7 @@ object BpeTrain {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val numMerges = if (args.length > 1) args(1).toInt else 32
     val maxWords = if (args.length > 2) args(2).toInt else 10000
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session(sfDir).spark
     val docs = graft.Tables.load(spark, sfDir, "documents")
     val merges = graft.ops.Bpe.train(docs, "text", numMerges, maxWords)
     println(merges.map { case (a, b) => s"""("$a", "$b")""" }

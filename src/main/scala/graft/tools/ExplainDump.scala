@@ -1,18 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for gate queries to files — the
   * optimization rounds' plan-evidence capture (plans/rNN/<q>_before.txt).
   *
   * Usage: ExplainDump <sfDir> <outDir> <query>[,<query>...] [suffix]
   * Writes <outDir>/<query>_<suffix>.txt (suffix defaults to "before").
-  * The session mirrors Bench's conf (local[32], shuffle.partitions=32,
-  * UTC, nanosAsLong) so the captured plans are the benched plans.
+  * The session is Bench.session's, so the captured plans are the
+  * benched plans.
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
-    graft.plans.ProbeAgg.pinColdUnlessRequested()
     val sfDir = args(0)
     val outDir = args(1)
     // "ALL" sweeps every declared gate — the optimization-round plan
@@ -21,14 +18,7 @@ object ExplainDump {
       if (args(2) == "ALL") graft.SparkEntry.queries.keys.toSeq.sorted
       else args(2).split(",").toSeq
     val suffix = if (args.length > 3) args(3) else "before"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session(sfDir).spark
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     // GRAFT_EXPLAIN_EXEC=1: execute (noop sink) BEFORE dumping, so the
     // capture is the FINAL adaptive plan — AQE stage reuse, coalesced

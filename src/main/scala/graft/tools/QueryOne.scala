@@ -1,31 +1,22 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Time one gate query under ad-hoc session confs — the A/B harness
-  * behind the bench tuning notes in BASELINE.md.
+/** Time one gate query under ad-hoc session confs — the conf-arm A/B
+  * behind the bench tuning notes in BASELINE.md (commit-vs-commit A/Bs
+  * run through perfbench/run.py).
   *
   * Usage: QueryOne <sfDir> <query>[,<query>...] [k=v ...]
-  * Extra args become session confs (e.g.
-  * spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold=256m).
+  * Extra args become session confs over the bench posture (e.g.
+  * spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold=64m).
   * Prints warm + best-of-2 per query.
   */
 object QueryOne {
   def main(args: Array[String]): Unit = {
-    graft.plans.ProbeAgg.pinColdUnlessRequested()
     val sfDir = args(0)
     val queries = args(1).split(",").toSeq
-    val confs = args.drop(2).map { kv =>
+    val confs = args.drop(2).toSeq.map { kv =>
       val Array(k, v) = kv.split("=", 2); (k, v)
     }
-    val builder = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    confs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session(sfDir, confs).spark
     queries.foreach { q =>
       def once(): Double = {
         val t0 = System.nanoTime()

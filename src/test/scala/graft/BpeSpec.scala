@@ -48,6 +48,21 @@ class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got(2) == (Seq(), 0L) && got(3) == (Seq(), 0L))
   }
 
+  test("gate on empty and whitespace-only documents: 0 tokens, md5 of ''") {
+    import spark.implicits._
+    // the q_text_bpe oracle coalesces DuckDB's NULL join of an empty
+    // token list to ''; this pins the engine side it must agree with
+    val dir = java.nio.file.Files.createTempDirectory("bpegate").toString
+    Seq((0L, "low lower"), (1L, "  \t  "), (2L, ""))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val got = SparkEntry.queries("q_text_bpe")(spark, dir).collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
+    val emptyMd5 = "d41d8cd98f00b204e9800998ecf8427e"
+    assert(got(1L) == ((0L, emptyMd5)) && got(2L) == ((0L, emptyMd5)),
+      s"got $got")
+    assert(got(0L)._1 > 0)
+  }
+
   test("chunkByTokens: budget in BPE tokens, word-boundary cuts, overlap") {
     import spark.implicits._
     val merges = Seq(("a", "b")) // "ab" → 1 token, other words → chars

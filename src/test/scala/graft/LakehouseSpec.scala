@@ -157,6 +157,44 @@ class LakehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(df.count() == expected)
   }
 
+  test("UPDATE and MERGE of a partition source column move rows to " +
+      "their new partition") {
+    val li = Tables.load(spark, sf, "lineitem")
+    val dateType = li.schema("l_shipdate").dataType
+    def month(from: String, to: String) =
+      col("l_shipdate") >= lit(from).cast("timestamp") &&
+        col("l_shipdate") < lit(to).cast("timestamp")
+    val jan = month("1996-01-01", "1996-02-01")
+    val may = month("1996-05-01", "1996-06-01")
+    val mayDate = lit("1996-05-15").cast(dateType)
+    val half = li.filter(month("1996-01-01", "1996-07-01"))
+    def monthly() = Engine.ctas(spark, tmp(), half,
+      spec = List(PartitionField("l_shipdate", "month")))
+    // a pruned scan of the new month sees every row the full read does
+    def assertScanComplete(tbl: LakeTable, moved: Long): Unit = {
+      val (scanned, stats) = tbl.scan(may)
+      val full = tbl.toDF.filter(may)
+      assert(stats.skipped > 0)
+      assert(full.count() == half.filter(may).count() + moved)
+      assert(scanned.exceptAll(full).isEmpty &&
+        full.exceptAll(scanned).isEmpty,
+        s"scan(May)=${scanned.count()} toDF.filter(May)=${full.count()}")
+    }
+
+    val upd = monthly()
+    val r = Engine.update(upd, jan, Map("l_shipdate" -> mayDate))
+    assert(r.matchedRows > 0)
+    assertScanComplete(upd, r.matchedRows)
+
+    val mrg = monthly()
+    val src = half.filter(jan).orderBy("l_orderkey", "l_linenumber")
+      .limit(50).withColumn("l_shipdate", mayDate)
+    val m = Engine.merge(mrg, src, Seq("l_orderkey", "l_linenumber"),
+      whenNotMatchedInsert = false)
+    assert(m.matchedRows == 50)
+    assertScanComplete(mrg, 50)
+  }
+
   test("bucket partitioning prunes on equality only") {
     val dir = tmp()
     val c = Tables.load(spark, sf, "customer")

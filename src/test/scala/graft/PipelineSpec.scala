@@ -100,20 +100,25 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("grouped candidate generation is pair-identical to the self-join " +
       "(r18: one band shuffle instead of two)") {
-    def cands(path: String): Set[(Long, Long)] = {
-      spark.conf.set("spark.graft.minhash.candPath", path)
-      try {
-        val p = Dedup.minhashPlan(planted, "doc_id", "text", threshold = 0.6)
-        p.cand.collect().map(r => (r.getAs[Long]("id_a"),
-          r.getAs[Long]("id_b"))).toSet
-      } finally {
-        spark.conf.unset("spark.graft.minhash.candPath")
-        Dedup.releaseCaches()
-        spark.catalog.clearCache()
-      }
+    // the self-join's pair set, computed straight from the signatures:
+    // every a < b whose signatures agree on some full band
+    val (grouped, joined) = try {
+      val p = Dedup.minhashPlan(planted, "doc_id", "text", threshold = 0.6)
+      val grouped = p.cand.collect().map(r => (r.getAs[Long]("id_a"),
+        r.getAs[Long]("id_b"))).toSet
+      val sigs = p.sig.select("id", "sig").collect()
+        .map(r => (r.getLong(0), r.getSeq[Long](1).toIndexedSeq))
+      val rows = sigs.head._2.size / p.nBands
+      def band(s: IndexedSeq[Long], k: Int) = s.slice(k * rows, (k + 1) * rows)
+      val joined = (for {
+        (a, sa) <- sigs; (b, sb) <- sigs
+        if a < b && (0 until p.nBands).exists(k => band(sa, k) == band(sb, k))
+      } yield (a, b)).toSet
+      (grouped, joined)
+    } finally {
+      Dedup.releaseCaches()
+      spark.catalog.clearCache()
     }
-    val grouped = cands("group")
-    val joined = cands("join")
     assert(grouped == joined,
       s"only-join=${(joined -- grouped).take(3)} " +
         s"only-group=${(grouped -- joined).take(3)}")
