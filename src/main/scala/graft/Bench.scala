@@ -120,29 +120,6 @@ object Bench {
        catch { case _: Exception => sfDir }).hashCode)
     val layoutTo =
       s"${System.getProperty("java.io.tmpdir")}/graft-bkt-$layoutHex"
-    // the r13 key change (raw string → canonical path) orphaned layouts
-    // built under THIS fixture's old raw-string key (up to ~15 GB at
-    // sf100): reclaim exactly that alias — never other fixtures' dirs,
-    // whose keys legitimately differ. Opt-in (SPARK_GRAFT_RECLAIM=1):
-    // an unconditional delete races a paired A/B arm running an older
-    // binary that still keys layouts by the raw path — deleting its
-    // live layout mid-run forces a rebuild that corrupts the comparison
-    // (and risks the disk-exhaustion hazard the rebuild itself carries).
-    if (sys.env.getOrElse("SPARK_GRAFT_RECLAIM", "0") == "1") {
-      val oldHex = java.lang.Integer.toHexString(sfDir.hashCode)
-      if (oldHex != layoutHex) {
-        val orphan = java.nio.file.Paths.get(
-          s"${System.getProperty("java.io.tmpdir")}/graft-bkt-$oldHex")
-        if (java.nio.file.Files.isDirectory(orphan))
-          try {
-            val s = java.nio.file.Files.walk(orphan)
-            try s.sorted(java.util.Comparator.reverseOrder())
-              .forEach(p => { try java.nio.file.Files.deleteIfExists(p)
-                catch { case _: Exception => } })
-            finally s.close()
-          } catch { case _: Exception => }
-      }
-    }
     def bname(t: String) = s"graft_bkt_${layoutHex}_$t"
     val nBk = cpus.toInt
     /** Build-or-reuse every clustered rewrite; returns seconds spent
@@ -172,18 +149,14 @@ object Bench {
     // SECTION was already running the >2x holdout shapes at 0.6-2.5 s;
     // r13 verdict task 1b). sf10's 1.7 GB fixture now dispatches; the
     // driver's sf0.1 fixture (17 MB) stays stock.
-    val layoutMinBytes = sys.env.getOrElse("SPARK_GRAFT_LAYOUT_MIN_MB",
-      "1024").toLong << 20
-    val layoutAware = sfBytes >= layoutMinBytes &&
+    val layoutAware = sfBytes >= (1024L << 20) &&
       sys.env.getOrElse("SPARK_GRAFT_LAYOUT", "1") == "1"
     // layout codec: uncompressed decodes ~1.5-2x faster (ScanFloor2 A/B)
     // and the sf10-class layout fits local disk many times over; at the
     // sf100 decade the uncompressed layout (~3x snappy's 15 GB) would
     // flirt with this box's free disk, so big fixtures keep snappy.
-    // Override: SPARK_GRAFT_LAYOUT_CODEC.
     sys.props("graft.layout.compression") =
-      sys.env.getOrElse("SPARK_GRAFT_LAYOUT_CODEC",
-        if (hygiene) "snappy" else "none")
+      if (hygiene) "snappy" else "none"
     var layoutBuild = -1.0
     if (layoutAware) {
       layoutBuild = ensureLayouts()
@@ -576,7 +549,7 @@ object Bench {
     // session total hit 112 GB and the kernel OOM-killed the JVM. Both
     // tricks therefore engage only below a parquet-size cutoff; bigger
     // fixtures keep compression and spill to real disk, exactly as a
-    // cluster deployment would. Override: SPARK_GRAFT_TMPFS=0.
+    // cluster deployment would.
     val sfBytes = {
       def du(p: java.io.File): Long =
         if (p.isFile) p.length
@@ -600,10 +573,7 @@ object Bench {
     // the round-10 closing band — were measured WITHOUT hygiene. Keeping
     // the r11 hygiene on at sf10 is the round-12 A/B's prime suspect for
     // the 25-40% uniform sf10 inflation r11 attributed to box state.
-    // Override: SPARK_GRAFT_HYGIENE_MIN_MB.
-    val hygieneMinBytes = sys.env.getOrElse("SPARK_GRAFT_HYGIENE_MIN_MB",
-      "4096").toLong << 20
-    val hygiene = sfBytes >= hygieneMinBytes
+    val hygiene = sfBytes >= (4096L << 20)
     // Disk-regime join policy (the generalization of the round-11 yoy
     // fix): in the sf100-class regime, AQE's SMJ→SHJ conversion is a
     // fatal-abort class — a converted build that cannot acquire memory
@@ -618,8 +588,7 @@ object Bench {
     // the cutoff, the conversion's measured ~10% win on sf10 join
     // queries stands (q5's lineitem⋈orders skips sorting 60M rows).
     builder.config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD",
-        if (hygiene) "64m" else "256m"))
+      if (hygiene) "64m" else "256m")
     val shuffleDirRequested =
       if (small || !hygiene) None
       else {
@@ -635,8 +604,7 @@ object Bench {
     if (small) {
       builder.config("spark.shuffle.compress", "false")
       builder.config("spark.shuffle.spill.compress", "false")
-      if (sys.env.getOrElse("SPARK_GRAFT_TMPFS", "1") == "1" &&
-          java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm")))
+      if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm")))
         builder.config("spark.local.dir", "/dev/shm/graft-bench")
     }
     confs.foreach { case (k, v) => builder.config(k, v) }

@@ -263,15 +263,14 @@ object BigWindow {
     *
     * Output: `df` + columns `_trail`, `_run`, `_fsum`, `_fcnt`.
     *
-    * Size-adaptive like [[graft.ops.Rollup.rollupAuto]]: below the
-    * input-size threshold (spark.graft.bigwindow.autoThreshold, bytes)
-    * the classic single-task-per-key window wins — the layout's fixed
-    * job cost (range sampling, cache, sufficiency count) exceeds what
+    * Size-adaptive ([[SizeDispatch.BigWindowSize]]): below the limit the
+    * classic single-task-per-key window wins — the layout's fixed job
+    * cost (range sampling, cache, sufficiency count) exceeds what
     * distribution saves on sub-second sorts (sf0.1: classic 0.38 s vs
     * layout 2.9 s) — while above it the serial sort is the
-    * low-cardinality window-skew failure mode (sf10: 12.9 → 9.9 s, and
-    * at cluster scale the classic plan caps at one executor per
-    * distinct key). One declaration, right regime at every scale. */
+    * low-cardinality window-skew failure mode (sf10: 12.9 → 9.9 s, and at
+    * cluster scale the classic plan caps at one executor per distinct
+    * key). One declaration, right regime at every scale. */
   def frameStats(df: DataFrame, partCol: String, orderCols: Seq[String],
       valueCol: String, trail: Int, fwd: Int,
       numRanges: Int = 0): DataFrame = {
@@ -292,33 +291,22 @@ object BigWindow {
         .withColumn("_fcnt",
           count(col(valueCol)).over(w.rowsBetween(0, fwd)))
     }
-    val thr = spark.conf
-      .get("spark.graft.bigwindow.autoThreshold", (512L << 20).toString)
-      .toLong
-    // analyzed-plan stats (r18): callers pass narrow projections of
-    // scans, where the size visitor's estimate equals the optimized
-    // plan's and the per-construction optimizer run is saved
-    if (df.queryExecution.analyzed.stats.sizeInBytes < BigInt(thr))
-      return classic
+    import SizeDispatch.{BigWindowSize, FrameStatsKeys, above, arm, planBytes}
+    val route = arm(BigWindowSize, spark, planBytes(df))
+    if (route == BigWindowSize.small) return classic
     // single-exchange custom operator where the types allow it (double
     // value, string/integral key): one range shuffle + one in-partition
     // sort vs this layout's four exchanges / three sorts — and its
     // declared output partitioning lets a downstream ORDER BY on an
-    // orderCols prefix skip the final exchange too. Opt out (or A/B)
-    // with spark.graft.bigwindow.zeroX=false. Key-cardinality guard:
-    // its seed metadata is O(partitions × keys) ON THE DRIVER, so
-    // high-cardinality keys route away — which is also the regime where
-    // the classic window has NO skew problem (many keys parallelize on
-    // their own) and is the right plan anyway.
-    if (spark.conf.get("spark.graft.bigwindow.zeroX", "true").toBoolean &&
+    // orderCols prefix skip the final exchange too. Key-cardinality
+    // guard ([[SizeDispatch.FrameStatsKeys]]): its seed metadata is
+    // O(partitions × keys) ON THE DRIVER, so high-cardinality keys route
+    // away — which is also the regime where the classic window has NO
+    // skew problem (many keys parallelize on their own) and is the right
+    // plan anyway.
+    if (route != "layout" &&
         graft.plans.FrameStats.supports(df, partCol, valueCol)) {
-      // clamp so partitions × keys can never reach the exec's loud
-      // segment backstop at ANY cluster width (the seeds collect is
-      // bounded by numRanges × distinct keys)
-      val maxKeys = math.min(
-        spark.conf.get("spark.graft.bigwindow.maxKeys", "10000").toLong,
-        graft.plans.FrameStats.segmentBackstop /
-          (2L * math.max(spark.sessionState.conf.numShufflePartitions, 1)))
+      val maxKeys = FrameStatsKeys.limit(spark).toLong
       // two-stage probe. Stage 1 (nearly free): a limited scan's
       // distinct count is a LOWER bound on the true count, so exceeding
       // maxKeys here is a sound rejection. Stage 2 (one full scan of
@@ -340,10 +328,9 @@ object BigWindow {
         if (cheap > maxKeys) cheap // sound rejection; skip the full scan
         else CardStats.approxDistinct(df, partCol)
       }
-      if (probed <= maxKeys)
-        return graft.plans.FrameStats.frameStats(df, partCol, orderCols,
-          valueCol, trail, fwd)
-      return classic
+      if (above(FrameStatsKeys, spark, probed)) return classic
+      return graft.plans.FrameStats.frameStats(df, partCol, orderCols,
+        valueCol, trail, fwd)
     }
     val n = if (numRanges > 0) numRanges
       else spark.sessionState.conf.numShufflePartitions

@@ -139,11 +139,8 @@ object Dedup {
       threshold: Double = 0.6): DataFrame = {
     val plan = minhashPlan(df, idCol, textCol, numHashes, bands,
       shingleK, threshold)
-    val spark = df.sparkSession
-    val mode = spark.conf
-      .get("spark.graft.minhash.clusteredVerify", "auto")
-    // Dispatch, settled by measurement across two decades
-    // (BASELINE "Round 10: q_dedup_minhash ledgered"):
+    // Dispatch ([[SizeDispatch.MinhashVerify]]), settled by measurement
+    // across two decades (BASELINE "Round 10: q_dedup_minhash ledgered"):
     //  - sf10 (500k docs / 30.8M surviving pairs): pair-join 44.0 s vs
     //    clustered 63.2 s — the join path is whole-stage-codegen'd end
     //    to end and its array shuffle compresses well, so it wins while
@@ -153,12 +150,8 @@ object Dedup {
     //    left on device"), while the clustered layout's bound — O(docs)
     //    shingle arrays + O(pairs) bare ids — completes (BASELINE
     //    round-12 minhash section).
-    // So "auto" switches to the clustered layout past the same
-    // corpus-size dial that retires the SHJ hints
-    // (spark.graft.minhash.shjDocsBound, default 1M docs).
-    val clustered = mode == "always" ||
-      (mode == "auto" && plan.nDocs > spark.conf
-        .get("spark.graft.minhash.shjDocsBound", "1000000").toLong)
+    val clustered = SizeDispatch.above(SizeDispatch.MinhashVerify,
+      df.sparkSession, plan.nDocs)
     if (clustered) exactVerifyClustered(plan.est, plan.sh, threshold)
     else exactVerifyJoin(plan.est, plan.sh, threshold, plan.big)
   }
@@ -222,11 +215,11 @@ object Dedup {
     // guards against for AQE conversions). Past the bound every join
     // reverts to the planner's spillable sort-merge — robust over peak,
     // the engine's standing disk-regime declaration.
-    // Dial: spark.graft.minhash.shjDocsBound (docs; 500k measured good
-    // at 8 GiB, 5M measured fatal at 64 GiB — default splits the decade).
-    val shjDocsBound = df.sparkSession.conf
-      .get("spark.graft.minhash.shjDocsBound", "1000000").toLong
-    val big = nDocs > 20000 && nDocs <= shjDocsBound
+    // Bound: [[SizeDispatch.MinhashCorpus]] (docs; 500k measured good at
+    // 8 GiB, 5M measured fatal at 64 GiB — the limit splits the decade).
+    val pairDense = SizeDispatch.above(SizeDispatch.MinhashCorpus,
+      df.sparkSession, nDocs)
+    val big = nDocs > 20000 && !pairDense
     def shj(d: DataFrame): DataFrame = if (big) d.hint("shuffle_hash") else d
     // Candidate pairs per bucket (r18, guide §2.3/§2.4): ONE hash
     // shuffle of the band rows + per-bucket pair enumeration, replacing
@@ -273,7 +266,7 @@ object Dedup {
       // positional-agreement kernel (one primitive pass per pair) and an
       // integer cut: agree/numHashes ≥ thr−0.2 ⟺ agree ≥ ⌈(thr−0.2)·n⌉
       val minAgree = math.ceil((threshold - 0.2) * numHashes).toLong
-      if (nDocs <= shjDocsBound) {
+      if (!pairDense) {
         val sigOnly = trackedCache(sig.select(col("id"), col("sig")))
         shj(cand)
           .join(sigOnly.select(col("id").as("id_a"), col("sig").as("sig_a")),

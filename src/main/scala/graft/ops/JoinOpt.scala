@@ -26,63 +26,39 @@ import org.apache.spark.sql.functions.broadcast
   */
 object JoinOpt {
 
-  private def broadcastThreshold(df: DataFrame): Long = {
-    val s = df.sparkSession.conf
-      .get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    // the conf accepts both bare byte counts (possibly -1 = disabled)
-    // and size-suffixed strings ("10MB")
-    scala.util.Try(s.toLong).getOrElse(
-      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s))
-  }
-
   /** `dim ⋈ agg` with the aggregate as broadcast build iff Spark's
-    * stats would have broadcast `dim`. `agg` must be key-bounded
-    * relative to `dim` (at most one row per dim key — e.g. a grouped
-    * aggregate on the join key), which is what makes the size argument
-    * sound. */
+    * stats would have broadcast `dim` ([[SizeDispatch.AggBuild]]). `agg`
+    * must be key-bounded relative to `dim` (at most one row per dim key —
+    * e.g. a grouped aggregate on the join key), which is what makes the
+    * size argument sound. */
   def aggBuildJoin(dim: DataFrame, agg: DataFrame, cond: Column)
       : DataFrame = {
-    val thr = broadcastThreshold(dim)
-    // analyzed-plan stats, not optimizedPlan: the dim is a narrow
-    // select over a scan, where the size visitor gives the identical
-    // file-stats estimate — and analysis is already done (DataFrames
-    // analyze eagerly), so this skips a per-construction optimizer run
-    // of the child (r18; the same fix as Q.ordered's dispatch)
-    val dimBytes = dim.queryExecution.analyzed.stats.sizeInBytes
-    if (thr > 0 && dimBytes <= BigInt(thr)) dim.join(broadcast(agg), cond)
-    else dim.join(agg, cond)
+    import SizeDispatch.{AggBuild, above, planBytes}
+    if (above(AggBuild, dim.sparkSession, planBytes(dim))) dim.join(agg, cond)
+    else dim.join(broadcast(agg), cond)
   }
 
-  /** Broadcast `side` iff `bound`'s optimized-plan size estimate stays
-    * under `spark.graft.reduceBroadcastThreshold` (default 256m — the
-    * routine torrent-broadcast range on a cluster, far under executor
-    * memory). `bound` must be a plan whose ROW COUNT provably bounds
-    * `side`'s and whose width is comparable — in practice the narrow
-    * projection of the scan `side` was derived from by filters and
-    * key-unique joins. The bound plan is what makes the guard usable:
-    * without CBO, Catalyst's size estimate for a JOIN output is the
-    * product of its inputs (measured: 2.2e19 "bytes" for a 901K-row
-    * join at sf10), so guarding on `side` itself would never fire; a
-    * scan estimate is file-stats-derived and tracks data scale
-    * linearly, so the same declaration broadcasts at warehouse scale
-    * and degrades to the keyed shuffle join at the 100 TB regime. */
+  /** Broadcast `side` iff `bound` is [[withinReduceBound]]. `bound` must
+    * be a plan whose ROW COUNT provably bounds `side`'s and whose width
+    * is comparable — in practice the narrow projection of the scan `side`
+    * was derived from by filters and key-unique joins. The bound plan is
+    * what makes the guard usable: without CBO, Catalyst's size estimate
+    * for a JOIN output is the product of its inputs (measured: 2.2e19
+    * "bytes" for a 901K-row join at sf10), so guarding on `side` itself
+    * would never fire; a scan estimate is file-stats-derived and tracks
+    * data scale linearly, so the same declaration broadcasts at warehouse
+    * scale and degrades to the keyed shuffle join at the 100 TB regime. */
   def broadcastIfBounded(side: DataFrame, bound: DataFrame): DataFrame = {
     if (withinReduceBound(bound)) broadcast(side) else side
   }
 
-  /** The broadcastIfBounded guard by itself, for callers that switch
-    * whole plan shapes (e.g. the ProbeAgg kernel vs the BHJ chain)
-    * rather than a single hint. */
+  /** Whether `bound`'s size estimate is within the reduce-side broadcast
+    * limit ([[SizeDispatch.ReduceBound]]: the routine torrent-broadcast
+    * range on a cluster, far under executor memory); callers that switch
+    * whole plan shapes (e.g. the ProbeAgg kernel vs the BHJ chain) use it
+    * directly. */
   def withinReduceBound(bound: DataFrame): Boolean = {
-    val thr = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      bound.sparkSession.conf
-        .get("spark.graft.reduceBroadcastThreshold", "256m"))
-    // analyzed-plan stats: every caller's bound is a narrow projection
-    // of a scan (that is the contract above), where the size visitor's
-    // estimate is identical to the optimized plan's — width-scaled
-    // file stats — and the per-construction optimizer run is saved
-    // (r18; the same fix as Q.ordered's dispatch)
-    thr > 0 &&
-      bound.queryExecution.analyzed.stats.sizeInBytes <= BigInt(thr)
+    import SizeDispatch.{ReduceBound, above, planBytes}
+    !above(ReduceBound, bound.sparkSession, planBytes(bound))
   }
 }

@@ -61,26 +61,22 @@ private[graft] object Par {
     * per-row cost is moderate (content hashing) rather than kernel-
     * expensive: the extra exchange only pays for itself when each scan
     * task would otherwise chew through a meaningful slab of bytes
-    * single-threaded. Dispatch signal = analyzed-plan leaf bytes / the
-    * same metadata-derived scan-task estimate fanOut uses. On every
-    * shipped fixture this is a NO-OP (sf0.1: 584 KB total; sf10/sf100:
-    * 32-file dirs that already scan parallel — verified via parquet
-    * footers, r18) — it exists to defend the single-big-file ingest
-    * shape (one 10 GB upload), where the moderate per-row cost times
-    * gigabytes-per-task is worth one narrow exchange while the same
-    * call on a tiny or well-laid-out input costs nothing. Override:
-    * spark.graft.fanout.minBytesPerTask (default 32m). */
+    * single-threaded. Dispatch ([[SizeDispatch.FanOut]]) on analyzed-plan
+    * leaf bytes / the same metadata-derived scan-task estimate fanOut
+    * uses. On every shipped fixture this is a NO-OP (sf0.1: 584 KB total;
+    * sf10/sf100: 32-file dirs that already scan parallel — verified via
+    * parquet footers, r18) — it exists to defend the single-big-file
+    * ingest shape (one 10 GB upload), where the moderate per-row cost
+    * times gigabytes-per-task is worth one narrow exchange while the same
+    * call on a tiny or well-laid-out input costs nothing. */
   def fanOutIfBulky(df: DataFrame): DataFrame = {
-    val minPerTask = org.apache.spark.network.util.JavaUtils
-      .byteStringAsBytes(df.sparkSession.conf
-        .get("spark.graft.fanout.minBytesPerTask", "32m"))
-    val leafBytes = df.queryExecution.analyzed.collectLeaves()
-      .map(_.stats.sizeInBytes).sum
     val perTask = estimateScanPartitions(df) match {
-      case Some(n) if n > 0 => leafBytes / n
+      case Some(n) if n > 0 => SizeDispatch.leafBytes(df) / n
       case _ => BigInt(0) // not file-backed: nothing to rescue
     }
-    if (perTask > BigInt(minPerTask)) fanOut(df) else df
+    if (SizeDispatch.above(SizeDispatch.FanOut, df.sparkSession, perTask))
+      fanOut(df)
+    else df
   }
 
   /** Estimated scan-task count for a file-backed plan: Spark packs file

@@ -46,12 +46,9 @@ object RankStats {
 
   /** `df` + `rnk` (int), `drnk` (int), `prnk` (double), `cdist`
     * (double) for `rank/dense_rank/percent_rank/cume_dist OVER
-    * (PARTITION BY partCol ORDER BY orderCols ASC)`. `auto = false`
-    * skips the size dispatch (the cardinality guards still apply) —
-    * the forced-rewrite oracle gate uses it at fixture scale. */
+    * (PARTITION BY partCol ORDER BY orderCols ASC)`. */
   def lowCardRanks(df: DataFrame, partCol: String,
-      orderCols: Seq[String], cap: Int = 100000,
-      auto: Boolean = true): DataFrame = {
+      orderCols: Seq[String], cap: Int = 100000): DataFrame = {
     require(orderCols.nonEmpty)
     val spark = df.sparkSession
     val keys = (partCol +: orderCols).map(col)
@@ -63,20 +60,13 @@ object RankStats {
         .withColumn("prnk", percent_rank().over(w))
         .withColumn("cdist", cume_dist().over(w))
     }
-    // size dispatch (same pattern as rollupAuto / bigwindow): below the
-    // threshold the classic window's single sub-second sort beats the
-    // rewrite's fixed probe/agg/join jobs (sf0.1: 0.7 vs 1.1 s); above
-    // it the serial window is the low-cardinality skew failure mode
-    // (sf10: 8.1 → 3.2 s, and the classic plan caps at one task per
-    // partition key at any cluster size)
-    val thr = spark.conf
-      .get("spark.graft.rankstats.autoThreshold", (256L << 20).toString)
-      .toLong
-    if (auto &&
-        // analyzed-plan stats (r18): same estimate for the narrow
-        // scan projections callers pass, no per-rep optimizer run
-        df.queryExecution.analyzed.stats.sizeInBytes < BigInt(thr))
-      return classic
+    // size dispatch: below the limit the classic window's single
+    // sub-second sort beats the rewrite's fixed probe/agg/join jobs
+    // (sf0.1: 0.7 vs 1.1 s); above it the serial window is the
+    // low-cardinality skew failure mode (sf10: 8.1 → 3.2 s, and the
+    // classic plan caps at one task per partition key at any cluster size)
+    import SizeDispatch.{RankStatsSize, above, planBytes}
+    if (!above(RankStatsSize, spark, planBytes(df))) return classic
     // stage-1 probe: a few row groups, not a full scan
     val probed = df.select(keys: _*).limit(500000)
       .agg(approx_count_distinct(struct(keys: _*))).head().getLong(0)

@@ -109,13 +109,14 @@ object Rollup {
     * both directions — native Expand wins at toy scale (sf0.1: the
     * per-level re-agg JOBS cost more than Expand saves on 600k rows,
     * +0.07 s) and loses once the fact dwarfs the job cost (sf10:
-    * rollup 2.0 → 0.7 s, cube −57%). This dispatch reads the input's
-    * optimizer size estimate and picks the regime, so ONE declaration
-    * is right at every scale — the decision a cost-based planner would
-    * make, made at the operator layer because Catalyst keeps Expand
-    * unconditionally. Both paths emit identical columns
-    * (dims, agg names, grouping_<dim> flags); both are oracle-gated.
-    * Threshold override: spark.graft.rollup.autoThreshold (bytes). */
+    * rollup 2.0 → 0.7 s, cube −57%; the sf0.1 scan estimate is ~75 MB,
+    * sf10's ~1.9 GB). This dispatch reads the input's size estimate and
+    * picks the regime, so ONE declaration is right at every scale — the
+    * decision a cost-based planner would make, made at the operator layer
+    * because Catalyst keeps Expand unconditionally
+    * ([[SizeDispatch.RollupSize]]). Both paths emit
+    * identical columns (dims, agg names, grouping_<dim> flags); both are
+    * oracle-gated. */
   def rollupAuto(df: DataFrame, dims: Seq[String], aggs: Seq[AggSpec],
       kernelMaxGroups: Int = 0): DataFrame =
     if (decompose(df))
@@ -134,19 +135,9 @@ object Rollup {
         kernelMaxGroups)
     else native(df, dims, aggs, cube = true)
 
-  /** Measured between the sf0.1 (native wins) and sf10 (finest-first
-    * wins) fixtures; the scan estimate for the 45 MB sf0.1 parquet is
-    * ~75 MB, for the 1.1 GB sf10 parquet ~1.9 GB. */
-  private val defaultThreshold = 512L << 20
-
-  private def decompose(df: DataFrame): Boolean = {
-    val thr = df.sparkSession.conf
-      .get("spark.graft.rollup.autoThreshold", defaultThreshold.toString)
-      .toLong
-    // analyzed-plan stats (r18): identical estimate for scan-shaped
-    // inputs, no extra optimizer pass at query construction
-    df.queryExecution.analyzed.stats.sizeInBytes >= BigInt(thr)
-  }
+  private def decompose(df: DataFrame): Boolean =
+    SizeDispatch.above(SizeDispatch.RollupSize, df.sparkSession,
+      SizeDispatch.planBytes(df))
 
   /** Native Expand-based plan with the same output contract as
     * [[fromFinest]]. */

@@ -246,9 +246,8 @@ final case class FrameStatsExec(partCol: String, orderCols: Seq[String],
             throw new IllegalStateException(
               s"FrameStats: partition $pid exceeds $perPartCap " +
                 "(partition, key) segments — the partition key is too " +
-                "high-cardinality for the seed broadcast; set " +
-                "spark.graft.bigwindow.zeroX=false (the classic window " +
-                "parallelizes fine over many keys)")
+                "high-cardinality for the seed broadcast; use the " +
+                "classic window (it parallelizes fine over many keys)")
           // unroll the ring into order
           val tv = new Array[Double](tailLen)
           val tn = new Array[Boolean](tailLen)
@@ -297,8 +296,7 @@ final case class FrameStatsExec(partCol: String, orderCols: Seq[String],
     require(metas.length <= FrameStats.segmentBackstop,
       s"FrameStats: ${metas.length} (partition, key) segments — the " +
         "partition key is too high-cardinality for the seed broadcast; " +
-        "set spark.graft.bigwindow.zeroX=false (the classic window " +
-        "parallelizes fine over many keys)")
+        "use the classic window (it parallelizes fine over many keys)")
     val byKey = metas.groupBy(_.key).map { case (k, segs) =>
       (k, segs.sortBy(_.pid))
     }

@@ -71,7 +71,7 @@ object ProbeAgg {
   // construction, not by TTL; probes not fully file-backed are never
   // cached. Disable (the bench's explicit cold arm):
   // SPARK_GRAFT_PROBE_CACHE=0 or spark.graft.probe.cache=0; retained
-  // bytes capped by ..._MB (default 2048), LRU-evicted.
+  // bytes capped at probeCacheBudgetBytes, LRU-evicted.
   private def probeCacheEnabled: Boolean =
     !sys.props.get("spark.graft.probe.cache")
       .orElse(sys.env.get("SPARK_GRAFT_PROBE_CACHE")).contains("0")
@@ -86,11 +86,7 @@ object ProbeAgg {
     if (!sys.env.contains("SPARK_GRAFT_PROBE_CACHE") &&
         !sys.props.contains("spark.graft.probe.cache"))
       sys.props("spark.graft.probe.cache") = "0"
-  private def probeCacheBudgetBytes: Long =
-    sys.props.get("spark.graft.probe.cache.mb")
-      .orElse(sys.env.get("SPARK_GRAFT_PROBE_CACHE_MB"))
-      .flatMap(s => scala.util.Try(s.toLong).toOption)
-      .getOrElse(2048L) * (1L << 20)
+  private val probeCacheBudgetBytes: Long = 2L << 30
 
   private val packLru =
     new java.util.LinkedHashMap[String, PackedMap](16, 0.75f, true)

@@ -26,6 +26,7 @@ object QTpcds {
   private val qYoySpark: QueryFn = { (s, dir) =>
     import org.apache.spark.sql.functions._
     import graft.ops.JoinOpt.withinReduceBound
+    import graft.ops.SizeDispatch.{YoyFact, above, planBytes}
     import graft.plans.ProbeAgg
     import graft.plans.ProbeAgg.Probe
     import graft.plans.LowCardAgg.{ProductSum, Term}
@@ -85,17 +86,10 @@ object QTpcds {
         // <= |nation| x 4 years rows by construction: one-task sort,
         // no sampling pass (r18, q10 dispatch class)
         .transform(orderedTiny(_, col("nation"), col("yr")))
-    } else if (!bucketed &&
-        // analyzed-plan stats (r18): the probe input is a bare table
-        // scan, where the size visitor's estimate equals the optimized
-        // plan's and the per-construction optimizer run is saved — the
-        // last production-path optimizedPlan.stats probe
-        t("lineitem").queryExecution.analyzed.stats.sizeInBytes >
-          BigInt(s.conf.get("spark.graft.yoy.aggBelowJoinBytes",
-            (4L << 30).toString).toLong)) {
+    } else if (!bucketed && above(YoyFact, s, planBytes(t("lineitem")))) {
       // beyond the probe-map bound, no co-located layout, and a fact
       // too big for the shuffle to stay in memory (the sf100 headline
-      // regime — the threshold is the scan-stats size, default 4 GiB):
+      // regime — the limit is on the fact's scan-stats size):
       // aggregate BELOW the join. Summing revenue per orderkey first
       // rides the map-side partial aggregation (lineitem rows for an
       // order co-locate in files, so ~4 items collapse to 1 before the
@@ -276,6 +270,7 @@ object QTpcds {
   private val qTopPerGroupSpark: QueryFn = { (s, dir) =>
     import org.apache.spark.sql.functions._
     import graft.ops.JoinOpt.withinReduceBound
+    import graft.ops.SizeDispatch.{YoyFact, above, planBytes}
     import graft.plans.ProbeAgg
     import graft.plans.ProbeAgg.Probe
     import graft.plans.LowCardAgg.{ProductSum, Term}

@@ -52,11 +52,14 @@ object QWin {
     // the classic window here; RankStatsSpec pins equivalence, this
     // puts the rewrite itself under the oracle)
     "q_win_rank_freq" -> { (s, dir) =>
-      graft.ops.RankStats.lowCardRanks(
+      import graft.ops.SizeDispatch.{RankStatsSize, forcing}
+      val ranked = forcing(RankStatsSize -> "rewrite") {
+        graft.ops.RankStats.lowCardRanks(
           li(s, dir).select("l_orderkey", "l_linenumber", "l_returnflag",
             "l_quantity"),
-          "l_returnflag", Seq("l_quantity"), auto = false)
-        .select(
+          "l_returnflag", Seq("l_quantity"))
+      }
+      ranked.select(
           col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
           col("l_quantity"),
           col("rnk"), col("drnk"),
@@ -125,23 +128,18 @@ object QWin {
     "q_win_frame_dist" -> { (s, dir) =>
       val base = li(s, dir).select("l_orderkey", "l_linenumber",
         "l_partkey", "l_suppkey", "l_returnflag", "l_quantity")
-      val key = "spark.graft.bigwindow.autoThreshold"
-      val old = s.conf.getOption(key)
-      s.conf.set(key, "1")
-      try {
+      import graft.ops.SizeDispatch.{BigWindowSize, forcing}
+      val dist = forcing(BigWindowSize -> "distributed") {
         graft.ops.BigWindow.frameStats(base, "l_returnflag",
-            Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"),
-            "l_quantity", trail = 3, fwd = 3)
-          .select(
-            col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
-            round(col("_trail"), 2).as("trail3"),
-            round(col("_run"), 2).as("running"),
-            round(col("_fsum") / col("_fcnt"), 6).as("fwd_avg"))
-          .orderBy("l_orderkey", "l_linenumber")
-      } finally old match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
+          Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"),
+          "l_quantity", trail = 3, fwd = 3)
       }
+      dist.select(
+          col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
+          round(col("_trail"), 2).as("trail3"),
+          round(col("_run"), 2).as("running"),
+          round(col("_fsum") / col("_fcnt"), 6).as("fwd_avg"))
+        .orderBy("l_orderkey", "l_linenumber")
     },
 
     // RANGE frame with a numeric offset over the ordering key

@@ -6,12 +6,14 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
+import graft.ops.SizeDispatch.{Ordered, forcing}
+
 /** queries.Q.ordered — the size-dispatched deterministic sort the gate
   * queries end with (r17 optimization round). Pins:
   *  - small regime: ONE single-partition shuffle, NO range partitioning
   *    (a range sort runs a sampling job that re-executes the narrow
   *    chain above the last shuffle once more per query);
-  *  - large regime (threshold forced to 1 byte): the scale-correct
+  *  - large regime (arm forced): the scale-correct
   *    parallel range sort;
   *  - both regimes produce the same rows in the same key order.
   */
@@ -36,33 +38,29 @@ class OrderedDispatchSpec extends AnyFunSuite with BeforeAndAfterAll {
     .select("o_orderkey", "o_totalprice")
 
   test("small regime: single-partition sort, no range sampling pass") {
-    spark.conf.unset("spark.graft.sort.onePartitionMaxBytes")
     val p = physical(queries.Q.ordered(base, col("o_orderkey")))
     assert(p.contains("SinglePartition"), p)
     assert(!p.contains("rangepartitioning"), p)
   }
 
-  test("large regime (threshold 1): parallel range sort") {
-    spark.conf.set("spark.graft.sort.onePartitionMaxBytes", "1")
-    try {
-      val p = physical(queries.Q.ordered(base, col("o_orderkey")))
-      assert(p.contains("rangepartitioning"), p)
-      assert(!p.contains("SinglePartition"), p)
-    } finally spark.conf.unset("spark.graft.sort.onePartitionMaxBytes")
+  test("large regime (forced): parallel range sort") {
+    val p = physical(forcing(Ordered -> "rangeSort") {
+      queries.Q.ordered(base, col("o_orderkey"))
+    })
+    assert(p.contains("rangepartitioning"), p)
+    assert(!p.contains("SinglePartition"), p)
   }
 
   test("both regimes emit identical ordered rows") {
     val small = queries.Q.ordered(base, col("o_orderkey")).collect()
-    spark.conf.set("spark.graft.sort.onePartitionMaxBytes", "1")
-    val large =
-      try queries.Q.ordered(base, col("o_orderkey")).collect()
-      finally spark.conf.unset("spark.graft.sort.onePartitionMaxBytes")
+    val large = forcing(Ordered -> "rangeSort") {
+      queries.Q.ordered(base, col("o_orderkey"))
+    }.collect()
     assert(small.toSeq == large.toSeq)
   }
 
   test("join above small leaves dispatches single-partition " +
       "(r18: leaf-size signal, not the inflated join estimate)") {
-    spark.conf.unset("spark.graft.sort.onePartitionMaxBytes")
     val o = Tables.load(spark, sf, "orders")
       .select("o_orderkey", "o_custkey")
     val c = Tables.load(spark, sf, "customer")
@@ -74,11 +72,10 @@ class OrderedDispatchSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("orderedTiny is always single-partition (proven-tiny outputs)") {
-    spark.conf.set("spark.graft.sort.onePartitionMaxBytes", "1")
-    try {
-      val p = physical(queries.Q.orderedTiny(base, col("o_orderkey")))
-      assert(p.contains("SinglePartition"), p)
-      assert(!p.contains("rangepartitioning"), p)
-    } finally spark.conf.unset("spark.graft.sort.onePartitionMaxBytes")
+    val p = physical(forcing(Ordered -> "rangeSort") {
+      queries.Q.orderedTiny(base, col("o_orderkey"))
+    })
+    assert(p.contains("SinglePartition"), p)
+    assert(!p.contains("rangepartitioning"), p)
   }
 }

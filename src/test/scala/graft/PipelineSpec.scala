@@ -6,6 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.ops.SizeDispatch.{BigWindowSize, MinhashCorpus, MinhashVerify,
+  forcing}
 
 class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -130,19 +132,17 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the sf-scale verify layout (components + per-cluster in-memory
     // maps) must reproduce the join layout's output EXACTLY — pairs,
     // integer counts, and the HALF_UP 6-digit jaccard rounding
-    def run(mode: String): Set[(Long, Long, Long, Long, Double)] = {
-      spark.conf.set("spark.graft.minhash.clusteredVerify", mode)
-      try Dedup.minhashPairs(planted, "doc_id", "text", threshold = 0.6)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+    def run(arm: String): Set[(Long, Long, Long, Long, Double)] =
+      try forcing(MinhashVerify -> arm) {
+        Dedup.minhashPairs(planted, "doc_id", "text", threshold = 0.6)
+      }.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getDouble(4))).toSet
       finally {
-        spark.conf.set("spark.graft.minhash.clusteredVerify", "auto")
         Dedup.releaseCaches()
         spark.catalog.clearCache()
       }
-    }
-    val joined = run("never")
-    val clustered = run("always")
+    val joined = run("join")
+    val clustered = run("clustered")
     assert(clustered == joined,
       s"clustered verify diverged: only-join=${(joined -- clustered).take(3)}" +
         s" only-clustered=${(clustered -- joined).take(3)}")
@@ -151,22 +151,18 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("packed-byte estimate (pair-dense regime) is output-identical " +
       "to the full-signature estimate") {
-    // past shjDocsBound the estimate joins 64 B packed signatures
+    // past the corpus bound the estimate joins 64 B packed signatures
     // instead of 512 B full ones (PackSigBytes — recall-safe: packed
     // agreement >= true agreement, exact verify is the final word);
-    // forcing the bound low must not change a single output row
+    // forcing the pair-dense arm must not change a single output row
     def run(): Set[(Long, Long, Long, Long, Double)] =
       try Dedup.minhashPairs(planted, "doc_id", "text", threshold = 0.6)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getDouble(4))).toSet
       finally { Dedup.releaseCaches(); spark.catalog.clearCache() }
     val full = run()
-    spark.conf.set("spark.graft.minhash.shjDocsBound", "100")
-    spark.conf.set("spark.graft.minhash.clusteredVerify", "never")
-    val packed = try run() finally {
-      spark.conf.unset("spark.graft.minhash.shjDocsBound")
-      spark.conf.set("spark.graft.minhash.clusteredVerify", "auto")
-    }
+    val packed =
+      forcing(MinhashCorpus -> "pairDense", MinhashVerify -> "join")(run())
     assert(packed == full,
       s"packed estimate diverged: only-full=${(full -- packed).take(3)} " +
         s"only-packed=${(packed -- full).take(3)}")
@@ -177,16 +173,18 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // capDocs=2 forces every real cluster through the join fallback arm
     // (planted clusters are larger) — the union of arms must still be
     // byte-identical
-    spark.conf.set("spark.graft.minhash.clusteredVerify", "never")
-    val plan = Dedup.minhashPlan(planted, "doc_id", "text", threshold = 0.6)
-    val joined = Dedup.exactVerifyJoin(plan.est, plan.sh, 0.6, plan.big)
-      .collect().map(_.toSeq).toSet
-    val hybrid = Dedup.exactVerifyClustered(plan.est, plan.sh, 0.6,
-        capDocs = 2)
-      .collect().map(_.toSeq).toSet
-    spark.conf.set("spark.graft.minhash.clusteredVerify", "auto")
-    Dedup.releaseCaches()
-    spark.catalog.clearCache()
+    val (joined, hybrid) =
+      try {
+        val plan = Dedup.minhashPlan(planted, "doc_id", "text",
+          threshold = 0.6)
+        (Dedup.exactVerifyJoin(plan.est, plan.sh, 0.6, plan.big)
+          .collect().map(_.toSeq).toSet,
+          Dedup.exactVerifyClustered(plan.est, plan.sh, 0.6, capDocs = 2)
+            .collect().map(_.toSeq).toSet)
+      } finally {
+        Dedup.releaseCaches()
+        spark.catalog.clearCache()
+      }
     assert(hybrid == joined)
     assert(joined.nonEmpty)
   }
@@ -292,12 +290,11 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // estimate — this test exercises BOTH distributed implementations
     // (the single-exchange FrameStatsExec and the union-carry layout)
     // against the serial window
-    spark.conf.set("spark.graft.bigwindow.autoThreshold", "1")
-    for (zeroX <- Seq("true", "false")) {
-      spark.conf.set("spark.graft.bigwindow.zeroX", zeroX)
-      val dist = BigWindow.frameStats(df, "p", Seq("id"), "v",
-        trail = 3, fwd = 3, numRanges = 8)
-        .select("id", "_trail", "_run", "_fsum", "_fcnt")
+    for (arm <- Seq("distributed", "layout")) {
+      val dist = forcing(BigWindowSize -> arm) {
+        BigWindow.frameStats(df, "p", Seq("id"), "v",
+          trail = 3, fwd = 3, numRanges = 8)
+      }.select("id", "_trail", "_run", "_fsum", "_fcnt")
       // join on id alone: a null p would drop its own comparison row
       val bad = dist.join(classic(df).select("id", "t_c", "r_c",
           "fs_c", "fc_c"), Seq("id"), "full_outer")
@@ -306,14 +303,15 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
           not(col("_fsum") <=> col("fs_c")) ||
           not(col("_fcnt") <=> col("fc_c")))
       assert(bad.count() == 0,
-        s"zeroX=$zeroX divergence: ${bad.take(3).toSeq}")
+        s"$arm divergence: ${bad.take(3).toSeq}")
     }
-    spark.conf.unset("spark.graft.bigwindow.zeroX")
     // frames wider than the tiny block slices → classic fallback, exact
     val tiny = spark.range(0, 40).select(col("id"),
       lit("k").as("p"), col("id").cast("double").as("v"))
-    val fb = BigWindow.frameStats(tiny, "p", Seq("id"), "v",
-      trail = 3, fwd = 25, numRanges = 8)
+    val fb = forcing(BigWindowSize -> "distributed") {
+      BigWindow.frameStats(tiny, "p", Seq("id"), "v",
+        trail = 3, fwd = 25, numRanges = 8)
+    }
     val wbf = Window.partitionBy("p").orderBy("id")
     val fbC = tiny
       .withColumn("fs_c", sum(col("v")).over(wbf.rowsBetween(0, 25)))
@@ -321,42 +319,41 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fb.join(fbC, Seq("id", "p"))
       .filter(not(col("_fsum") <=> col("fs_c")) ||
         col("_fcnt") =!= col("fc_c")).count() == 0)
-    spark.conf.unset("spark.graft.bigwindow.autoThreshold")
     BigWindow.releaseCaches()
   }
 
   test("frameStats cardinality guard is unbiased on key-sorted input") {
     import graft.ops.BigWindow
-    spark.conf.set("spark.graft.bigwindow.autoThreshold", "1")
-    // 600K rows SORTED by key: the first 500K rows hold only ~500 of
-    // the ~600 distinct keys, so a limit-based probe reads below the
-    // guard while the true cardinality is above it — the bias that
-    // previously let a high-cardinality key sail into the seed-broadcast
-    // operator. The two-stage probe must confirm unbiased and route to
-    // the classic window.
-    val df = spark.range(0, 600000).select(col("id"),
-      (col("id") / 1000).cast("long").as("p"),
+    // 660K rows SORTED by key: the first 500K rows hold only ~9,100 of
+    // the ~12,000 distinct keys, so a limit-based probe reads below the
+    // 10,000-key guard while the true cardinality is above it — the bias
+    // that previously let a high-cardinality key sail into the
+    // seed-broadcast operator. The two-stage probe must confirm unbiased
+    // and route to the classic window.
+    val df = spark.range(0, 660000).select(col("id"),
+      (col("id") / 55).cast("long").as("p"),
       (col("id") % 7).cast("double").as("v"))
-    spark.conf.set("spark.graft.bigwindow.maxKeys", "540")
-    val routed = BigWindow.frameStats(df, "p", Seq("id"), "v",
-      trail = 2, fwd = 1)
+    val cheap = df.select("p").limit(500000)
+      .agg(approx_count_distinct(col("p"))).head().getLong(0)
+    assert(cheap <= 10000, s"limited probe $cheap must read below the guard")
+    def frames(d: org.apache.spark.sql.DataFrame) =
+      forcing(BigWindowSize -> "distributed") {
+        BigWindow.frameStats(d, "p", Seq("id"), "v", trail = 2, fwd = 1)
+      }
+    val routed = frames(df)
     assert(routed.queryExecution.analyzed.collect {
         case p: graft.plans.FrameStatsPlan => p }.isEmpty,
       "high-cardinality sorted key must route to the classic window")
     // below the (true) cardinality guard the zero-exchange operator
     // engages as before
-    spark.conf.set("spark.graft.bigwindow.maxKeys", "10000")
-    val engaged = BigWindow.frameStats(df, "p", Seq("id"), "v",
-      trail = 2, fwd = 1)
+    val engaged = frames(df.withColumn("p", (col("id") / 1000).cast("long")))
     assert(engaged.queryExecution.analyzed.collect {
         case p: graft.plans.FrameStatsPlan => p }.nonEmpty)
     // the statistic itself: unbiased (above the sorted-biased cheap
-    // probe's ~500), stable across calls (memoized per analyzed plan)
+    // probe's ~9,100), stable across calls (memoized per analyzed plan)
     val c1 = graft.ops.CardStats.approxDistinct(df, "p")
     val c2 = graft.ops.CardStats.approxDistinct(df, "p")
-    assert(c1 == c2 && c1 > 540, s"distinct stat $c1")
-    spark.conf.unset("spark.graft.bigwindow.maxKeys")
-    spark.conf.unset("spark.graft.bigwindow.autoThreshold")
+    assert(c1 == c2 && c1 > 10000, s"distinct stat $c1")
     BigWindow.releaseCaches()
   }
 

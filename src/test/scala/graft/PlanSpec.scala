@@ -5,6 +5,8 @@ import org.apache.spark.sql.execution.ExplainMode
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
+import graft.ops.SizeDispatch.{ReduceBound, forcing}
+
 /** Plan-hygiene assertions: the properties that keep these operators
   * viable at 1000-executor / 100 TB scale, checked on the actual physical
   * plans. A correct-but-unscalable plan (unpushed filter, shuffled dim
@@ -161,13 +163,10 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("qds_channel_rollup fallback arm: dims broadcast, no Expand") {
     // past the reduce bound the same declaration must keep the
     // reduction order on broadcast joins with the IN-list pushed down
-    spark.conf.set("spark.graft.reduceBroadcastThreshold", "0")
-    try {
-      val p = plan("qds_channel_rollup")
-      assert(nodeCount(p, "BroadcastHashJoin") >= 2, p)
-      assert(!p.contains("Expand"), p)
-      assert(p.contains("In(n_name"), p)
-    } finally spark.conf.unset("spark.graft.reduceBroadcastThreshold")
+    val p = forcing(ReduceBound -> "beyond")(plan("qds_channel_rollup"))
+    assert(nodeCount(p, "BroadcastHashJoin") >= 2, p)
+    assert(!p.contains("Expand"), p)
+    assert(p.contains("In(n_name"), p)
   }
 
   test("qds_yoy: single pass — the join+agg subtree appears once") {
@@ -429,12 +428,9 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(p.contains("ProbePreAgg"), p)
     // fallback arm carries the scan in the query plan itself — the
     // derived 1995-1999 range must be a pushed filter, not post-join
-    spark.conf.set("spark.graft.reduceBroadcastThreshold", "0")
-    try {
-      val pf = plan("qds_yoy")
-      assert(pf.contains("GreaterThanOrEqual(o_orderdate"), pf)
-      assert(pf.contains("LessThan(o_orderdate"), pf)
-    } finally spark.conf.unset("spark.graft.reduceBroadcastThreshold")
+    val pf = forcing(ReduceBound -> "beyond")(plan("qds_yoy"))
+    assert(pf.contains("GreaterThanOrEqual(o_orderdate"), pf)
+    assert(pf.contains("LessThan(o_orderdate"), pf)
   }
 
   test("whole-stage codegen covers the hot path") {

@@ -220,13 +220,11 @@ class ProbeAggSpec extends AnyFunSuite with BeforeAndAfterAll {
         "qds_top_per_group")) {
       val kernel = SparkEntry.queries(q)(spark, sf).collect()
         .map(_.toString).toSeq
-      spark.conf.set("spark.graft.reduceBroadcastThreshold", "0")
-      try {
-        val fallback = SparkEntry.queries(q)(spark, sf).collect()
-          .map(_.toString).toSeq
-        assert(kernel === fallback, q)
-      } finally spark.conf
-        .unset("spark.graft.reduceBroadcastThreshold")
+      val fallback = graft.ops.SizeDispatch.forcing(
+          graft.ops.SizeDispatch.ReduceBound -> "beyond") {
+        SparkEntry.queries(q)(spark, sf).collect().map(_.toString).toSeq
+      }
+      assert(kernel === fallback, q)
     }
   }
 

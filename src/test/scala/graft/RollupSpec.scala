@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 import graft.ops.Rollup
+import graft.ops.SizeDispatch.{RollupSize, forcing}
 
 /** Finest-first ROLLUP/CUBE/GROUPING SETS (ops/Rollup.scala): multiset
   * equality with Spark's native Expand-based operators — including
@@ -104,22 +105,16 @@ class RollupSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dims = Seq("l_returnflag", "l_linestatus")
     val aggs = Seq(Rollup.sum(col("l_quantity"), "sum_qty"),
       Rollup.count(lit(1), "n"))
-    def runWith(thr: String) = {
-      spark.conf.set("spark.graft.rollup.autoThreshold", thr)
-      try Rollup.rollupAuto(df, dims, aggs)
-      finally spark.conf.unset("spark.graft.rollup.autoThreshold")
-    }
-    // tiny threshold → decomposed (union of levels); huge → native Expand
-    val forced = runWith("1")
-    val native = runWith(Long.MaxValue.toString)
+    def runWith(arm: String) =
+      forcing(RollupSize -> arm)(Rollup.rollupAuto(df, dims, aggs))
+    // finest-first → decomposed (union of levels); native → Expand
+    val forced = runWith("finestFirst")
+    val native = runWith("native")
     assert(forced.queryExecution.executedPlan.toString.contains("Union"))
     assert(native.queryExecution.executedPlan.toString.contains("Expand"))
     assert(sortedRows(forced) == sortedRows(native))
-    val cubeF = {
-      spark.conf.set("spark.graft.rollup.autoThreshold", "1")
-      try Rollup.cubeAuto(df, dims, aggs)
-      finally spark.conf.unset("spark.graft.rollup.autoThreshold")
-    }
+    val cubeF =
+      forcing(RollupSize -> "finestFirst")(Rollup.cubeAuto(df, dims, aggs))
     val cubeN = Rollup.cube(df, dims, aggs)
     assert(sortedRows(cubeF) == sortedRows(cubeN))
   }
@@ -129,15 +124,14 @@ class RollupSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dims = Seq("l_returnflag", "l_linestatus")
     val aggs = Seq(Rollup.sum(col("l_quantity"), "sum_qty"),
       Rollup.count(lit(1), "n"))
-    spark.conf.set("spark.graft.rollup.autoThreshold", "1")
-    try {
+    forcing(RollupSize -> "finestFirst") {
       val viaKernel = Rollup.rollupAuto(df, dims, aggs,
         kernelMaxGroups = 64)
       val native = Rollup.rollupAuto(df, dims, aggs) // plain finest path
       assert(sortedRows(viaKernel) == sortedRows(native))
       val cubeK = Rollup.cubeAuto(df, dims, aggs, kernelMaxGroups = 64)
       assert(sortedRows(cubeK) == sortedRows(Rollup.cube(df, dims, aggs)))
-    } finally spark.conf.unset("spark.graft.rollup.autoThreshold")
+    }
   }
 
   test("the fact aggregates once: upper levels reuse the finest exchange") {
