@@ -46,16 +46,26 @@ final class LakeTable(val spark: SparkSession, val dir: String) {
   val deleteSchema: StructType = StructType.fromDDL(
     "file_path STRING, pos BIGINT")
 
-  private def readFiles(files: List[DataFile]): DataFrame = {
-    // match parquet columns by field id (rename-safe), not by name
+  /** This table's session, set to match parquet columns by field id
+    * (rename-safe), not by name. Every read of the table's data files
+    * goes through it: a name match would null a renamed column and
+    * resurrect a dropped one that was re-added under the same name. */
+  private def byFieldId: SparkSession = {
     spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+    spark
+  }
+
+  /** Raw scan of data files under the table schema, deletes NOT applied
+    * — the base of every read and every rewrite. */
+  private[graft] def readData(files: List[DataFile]): DataFrame =
+    if (files.isEmpty) // typed empty local relation: the optimizer folds it
+      byFieldId.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else byFieldId.read.schema(schema).parquet(files.map(_.path): _*)
+
+  private def readFiles(files: List[DataFile]): DataFrame = {
     val (deletes, data) = files.partition(_.isAnyDelete)
     val (eqDeletes, posDeletes) = deletes.partition(_.isEqDelete)
-    val base =
-      if (data.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row], schema) // typed empty relation
-      else spark.read.schema(schema).parquet(data.map(_.path): _*)
+    val base = readData(data)
     if (data.isEmpty) return base
     val posApplied =
       if (posDeletes.isEmpty) base else applyPositionDeletes(base, posDeletes)
@@ -168,10 +178,8 @@ final class LakeTable(val spark: SparkSession, val dir: String) {
     * form to register as a view for `spark.sql`. Returns the index too so
     * callers can read the files-scanned/skipped counters afterwards. */
   def toPrunedDF: (DataFrame, LakeFileIndex) = {
-    // match parquet columns by field id (rename-safe), not by name
-    spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
     val index = new LakeFileIndex(this)
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val classic = byFieldId.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
       index, new StructType(), schema, None,
       new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
@@ -214,28 +222,9 @@ final class LakeTable(val spark: SparkSession, val dir: String) {
         fresh ++= live.filter(f => !f.isAnyDelete && !prevPaths.contains(f.path))
       prevPaths = live.map(_.path).toSet
     }
-    val freshFiles = fresh.result()
-    val allDels = liveFilesAt(toSnapshot).filter(_.isAnyDelete)
-    val dels = allDels.filter(_.isDelete)
-    val eqDels = allDels.filter(_.isEqDelete)
-    if (freshFiles.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else {
-      // field-id parquet resolution is needed for this read only — run it
-      // on a CLONED session (own SessionState/conf, shared SparkContext;
-      // the Engine.adoptIceberg discipline) so the caller's session never
-      // transiently sees field-id schema resolution
-      val cdcSpark = spark.newSession()
-      cdcSpark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-      val base = cdcSpark.read.schema(schema)
-        .parquet(freshFiles.map(_.path): _*)
-      val posApplied =
-        if (dels.isEmpty) base else applyPositionDeletes(base, dels)
-      // a row appended and then equality-deleted inside the window must
-      // not surface either (same contract as the position-delete apply)
-      if (eqDels.isEmpty) posApplied
-      else applyEqualityDeletes(posApplied, eqDels, freshFiles)
-    }
+    // position AND equality deletes live at `toSnapshot` apply: a row
+    // appended and then deleted inside the window must not surface
+    readFiles(fresh.result() ++ liveFilesAt(toSnapshot).filter(_.isAnyDelete))
   }
 
   /** `lake_iceberg.snapshots`-style inspection. */

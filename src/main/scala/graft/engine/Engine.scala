@@ -121,24 +121,10 @@ object Engine {
          adoptSpark, icebergDir, ext, extData, extEq)))
     val deleteFiles =
       if (delSources.isEmpty) Nil
-      else {
-        val dataDir = MetadataIO.dataDir(destDir)
-        java.nio.file.Files.createDirectories(dataDir)
-        val staging = java.nio.file.Files.createTempDirectory("adoptdel")
-        delSources.reduce(_ unionByName _)
-          .dropDuplicates("file_path", "pos")
-          .coalesce(1)
-          .write.mode("overwrite").parquet(staging.toString)
-        val part = java.nio.file.Files.list(staging).iterator().asScala
-          .map(_.toString).filter(_.endsWith(".parquet")).toList.head
-        val dest = dataDir.resolve(
-          s"adopted-deletes-${java.util.UUID.randomUUID()}.parquet")
-        java.nio.file.Files.move(java.nio.file.Paths.get(part), dest)
-        val footer = ParquetStats.read(dest.toString)
-        List(DataFile(dest.toString, footer.rowCount,
-          java.nio.file.Files.size(dest), Map.empty, Map.empty,
-          content = Some(1)))
-      }
+      else publish(destDir, delSources.reduce(_ unionByName _)
+          .dropDuplicates("file_path", "pos").coalesce(1), "adopted-deletes-")
+        .map { case (path, _, footer) => DataFile(path, footer.rowCount,
+          footer.sizeBytes, Map.empty, footer.stats, content = Some(1)) }
     val files = dataFiles ++ deleteFiles
     val fieldIds = ext.schema.fields.map(f =>
       FieldId(f.name, f.metadata.getLong("parquet.field.id").toInt)).toList
@@ -188,67 +174,72 @@ object Engine {
     }
   }
 
-  /** Write df as new data files honoring the partition spec; returns the
-    * DataFile entries (stats read from parquet footers, as
-    * data_file_stats.c does). Does not commit. */
-  private def writeFiles(tbl: LakeTable, df: DataFrame): List[DataFile] = {
-    val spark = tbl.spark
-    val meta = tbl.meta
-    val schema = tbl.schema
-    val staging = Paths.get(tbl.dir, s".staging-${UUID.randomUUID()}")
-    val dataDir = MetadataIO.dataDir(tbl.dir)
+  /** The one path by which a file enters a table's `data/`: write `df`
+    * as snappy parquet into a `.staging-<uuid>` dir under the table root
+    * (same filesystem, so the move below is a rename), read every part's
+    * footer (executor-side for big batches, as data_file_stats.c reads
+    * stats from the writer's metadata), drop 0-row parts, and
+    * `ATOMIC_MOVE` the rest into `data/` as `<prefix><uuid>.parquet`.
+    * Columns carrying `parquet.field.id` metadata write their ids.
+    * `partitionCols` become `k=v` directories whose values come back per
+    * file. The staging dir is removed even when the write throws. Does
+    * not commit: callers map each (path, partition, footer) to their own
+    * [[DataFile]] and hand it to [[commitSnapshot]]. */
+  private def publish(tableDir: String, df: DataFrame, prefix: String,
+      partitionCols: Seq[String] = Nil)
+      : List[(String, Map[String, String], ParquetStats.FileFooter)] = {
+    val dataDir = MetadataIO.dataDir(tableDir)
     Files.createDirectories(dataDir)
-    // keep commit-time stats exact: micros timestamps (not INT96)
-    // alias with the field-id metadata so parquet files carry the ids
-    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    val writer0 = df.select(schema.fields.map(f =>
-      col(s"`${f.name}`").as(f.name, f.metadata)): _*)
-    val spec = meta.partitionSpec
-    if (spec.isEmpty) {
-      writer0.write
-        .option("compression", "snappy")
-        .parquet(staging.toString)
-    } else {
-      val partCols = spec.map(pf => s"_p_${pf.partName}")
-      val withParts = spec.zip(partCols).foldLeft(writer0) {
-        case (d, (pf, pc)) =>
-          d.withColumn(pc, transformExpr(pf,
-            schema(pf.column).dataType).cast("string"))
-      }
-      withParts
-        .repartition(partCols.map(col): _*)
-        .write
-        .option("compression", "snappy")
-        .partitionBy(partCols: _*)
-        .parquet(staging.toString)
-    }
-    // move part files into data/, harvesting partition values from paths;
-    // footer stats for the whole batch are read executor-side
-    val moved = scala.collection.mutable.ListBuffer[(String, Map[String, String])]()
-    val stream = Files.walk(staging)
+    val staging = Paths.get(tableDir, s".staging-${UUID.randomUUID()}")
     try {
-      stream.iterator().asScala
-        .filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .foreach { p =>
-          val rel = staging.relativize(p)
-          val partition = rel.iterator().asScala.map(_.toString)
-            .filter(_.contains("=")).map { seg =>
-              val Array(k, v) = seg.split("=", 2)
-              k.stripPrefix("_p_") ->
-                java.net.URLDecoder.decode(v, "UTF-8")
-            }.toMap
-          val dest = dataDir.resolve(s"${UUID.randomUUID()}.parquet")
-          Files.move(p, dest, StandardCopyOption.ATOMIC_MOVE)
-          moved += (dest.toString -> partition)
-        }
-    } finally stream.close()
-    deleteRecursively(staging)
-    val footers = ParquetStats.readMany(spark, moved.map(_._1).toSeq)
-    moved.toList.map { case (path, partition) =>
-      val footer = footers(path)
-      DataFile(path, footer.rowCount, footer.sizeBytes, partition,
-        footer.stats)
+      df.sparkSession.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+      df.write.option("compression", "snappy").partitionBy(partitionCols: _*)
+        .parquet(staging.toString)
+      val parts = {
+        val stream = Files.walk(staging)
+        try stream.iterator().asScala
+          .filter(_.getFileName.toString.endsWith(".parquet")).toList
+        finally stream.close()
+      }
+      val footers = ParquetStats.readMany(df.sparkSession, parts.map(_.toString))
+      parts.filter(p => footers(p.toString).rowCount > 0).map { p =>
+        val partition = staging.relativize(p).iterator().asScala
+          .map(_.toString).filter(_.contains("=")).map { seg =>
+            val Array(k, v) = seg.split("=", 2)
+            k -> java.net.URLDecoder.decode(v, "UTF-8")
+          }.toMap
+        val dest = dataDir.resolve(s"$prefix${UUID.randomUUID()}.parquet")
+        Files.move(p, dest, StandardCopyOption.ATOMIC_MOVE)
+        (dest.toString, partition, footers(p.toString))
+      }
+    } finally deleteRecursively(staging)
+  }
+
+  /** `df` projected onto the table schema, each column aliased with its
+    * field-id metadata so the written files carry the ids. */
+  private def withFieldIds(tbl: LakeTable, df: DataFrame): DataFrame =
+    df.select(tbl.schema.fields.map(f =>
+      col(s"`${f.name}`").as(f.name, f.metadata)): _*)
+
+  /** Write df as new data files honoring the partition spec. Does not
+    * commit. */
+  private def writeFiles(tbl: LakeTable, df: DataFrame): List[DataFile] = {
+    val schema = tbl.schema
+    val spec = tbl.meta.partitionSpec
+    val partCols = spec.map(pf => s"_p_${pf.partName}")
+    val withParts = spec.zip(partCols).foldLeft(withFieldIds(tbl, df)) {
+      case (d, (pf, pc)) =>
+        d.withColumn(pc, transformExpr(pf,
+          schema(pf.column).dataType).cast("string"))
     }
+    publish(tbl.dir,
+      if (spec.isEmpty) withParts
+      else withParts.repartition(partCols.map(col): _*), "", partCols)
+      .map { case (path, partition, footer) =>
+        DataFile(path, footer.rowCount, footer.sizeBytes,
+          partition.map { case (k, v) => k.stripPrefix("_p_") -> v },
+          footer.stats)
+      }
   }
 
   /** A commit found its removed-file set no longer fully live: another
@@ -263,8 +254,9 @@ object Engine {
   /** Bounded optimistic-retry loop for snapshot-conflicting operations:
     * `op` MUST re-derive its candidate file set from the table's current
     * snapshot on every attempt (all Engine DML does — `tbl.meta` is a
-    * fresh read). Files written by a conflicted attempt become orphans,
-    * which `gcOrphans` reclaims. */
+    * fresh read). Files a conflicted attempt already published into
+    * `data/` become orphans; only [[expireSnapshotIds]]' sweep of
+    * `data/` reclaims them, and only when it drops a snapshot. */
   def withCommitRetry[T](attempts: Int = 4)(op: => T): T = {
     var left = attempts
     while (true) {
@@ -365,20 +357,17 @@ object Engine {
   final case class DmlResult(rewrittenFiles: Int, droppedFiles: Int,
       untouchedFiles: Int, matchedRows: Long)
 
-  /** Which candidate files actually contain matching rows (distributed
-    * count, one pass). */
+  /** Which candidate files actually contain rows that `matching` keeps,
+    * and how many (distributed count, one pass). */
   private def filesWithMatches(tbl: LakeTable, candidates: List[DataFile],
-      pred: Column): Map[String, Long] = {
-    if (candidates.isEmpty) return Map.empty
-    val df = tbl.spark.read.schema(tbl.schema)
-      .parquet(candidates.map(_.path): _*)
-      // _metadata.file_path, not input_file_name(): the latter is
-      // nondeterministic and would stop pred from pushing into the scan
-      .withColumn("_file", col("_metadata.file_path"))
-      .filter(pred)
+      matching: DataFrame => DataFrame): Map[String, Long] =
+    if (candidates.isEmpty) Map.empty
+    else matching(tbl.readData(candidates)
+        // _metadata.file_path, not input_file_name(): the latter is
+        // nondeterministic and would stop filters pushing into the scan
+        .withColumn("_file", col("_metadata.file_path")))
       .groupBy("_file").agg(count(lit(1)).as("n"))
-    df.collect().map(r => normPath(r.getString(0)) -> r.getLong(1)).toMap
-  }
+      .collect().map(r => normPath(r.getString(0)) -> r.getLong(1)).toMap
 
   /** MERGE INTO (equi-key upsert): for each target row whose `keys`
     * equal a source row's — update the listed columns from the source
@@ -406,7 +395,6 @@ object Engine {
     require(!(whenMatchedDelete && whenMatchedUpdate.isDefined),
       "whenMatchedDelete and whenMatchedUpdate are mutually exclusive")
     flushDeletes(tbl)
-    val spark = tbl.spark
     val srcCols = source.columns.toSet
     require(keys.forall(srcCols.contains), s"source lacks key columns")
     // SQL MERGE cardinality rule: one source row per key, or the result
@@ -434,18 +422,13 @@ object Engine {
       else col(k) >= lit(lo) && col(k) <= lit(hi)
     }.reduce(_ && _)
     val (mustRead, _, _) = Pruning.partitionFiles(
-      Some(GraftBridge.resolvePredicate(spark, tbl.schema, rangePred)),
+      Some(GraftBridge.resolvePredicate(tbl.spark, tbl.schema, rangePred)),
       tbl.schema, tbl.meta.partitionSpec, files)
 
     // which candidates actually contain a key match (per-file counts)
     val srcKeys = source.select(keys.map(col): _*).distinct()
-    val matches: Map[String, Long] =
-      if (mustRead.isEmpty) Map.empty
-      else spark.read.schema(tbl.schema).parquet(mustRead.map(_.path): _*)
-        .withColumn("_file", col("_metadata.file_path"))
-        .join(srcKeys, keys, "left_semi")
-        .groupBy("_file").agg(count(lit(1)).as("n"))
-        .collect().map(r => normPath(r.getString(0)) -> r.getLong(1)).toMap
+    val matches = filesWithMatches(tbl, mustRead,
+      _.join(srcKeys, keys, "left_semi"))
     val rewrite = mustRead.filter(f => matches.contains(normPath(f.path)))
     val untouched = files.filterNot(f => matches.contains(normPath(f.path)))
 
@@ -480,14 +463,7 @@ object Engine {
       if (!whenNotMatchedInsert) Nil
       else {
         val targetKeys =
-          if (mustRead.isEmpty) {
-            import scala.jdk.CollectionConverters._
-            spark.createDataFrame(List.empty[org.apache.spark.sql.Row].asJava,
-              org.apache.spark.sql.types.StructType(
-                keys.map(k => tbl.schema(tbl.schema.fieldIndex(k)))))
-          } else spark.read.schema(tbl.schema)
-            .parquet(mustRead.map(_.path): _*)
-            .select(keys.map(col): _*).distinct()
+          tbl.readData(mustRead).select(keys.map(col): _*).distinct()
         val newRows = source.join(targetKeys, keys, "left_anti")
           .select(tbl.schema.fieldNames.map(col): _*)
         if (newRows.isEmpty) Nil else writeFiles(tbl, newRows)
@@ -508,7 +484,7 @@ object Engine {
       tbl.schema, tbl.meta.partitionSpec, files)
     val fullPaths = fullMatch.map(_.path).toSet
     val candidates = mustRead.filterNot(f => fullPaths.contains(f.path))
-    val matches = filesWithMatches(tbl, candidates, pred)
+    val matches = filesWithMatches(tbl, candidates, _.filter(pred))
     val rewrite = candidates.filter(f => matches.contains(normPath(f.path)))
     val untouched = files.filterNot(f =>
       fullPaths.contains(f.path) ||
@@ -543,11 +519,8 @@ object Engine {
       tbl.schema, tbl.meta.partitionSpec, data)
     val fullPaths = fullMatch.map(_.path).toSet
     val candidates = mustRead.filterNot(f => fullPaths.contains(f.path))
-    var added: List[DataFile] = Nil
-    var posCount = 0L
-    if (candidates.nonEmpty) {
-      val raw = tbl.spark.read.schema(tbl.schema)
-        .parquet(candidates.map(_.path): _*)
+    val added = if (candidates.isEmpty) Nil else {
+      val raw = tbl.readData(candidates)
         .withColumn("_file",
           regexp_replace(col("_metadata.file_path"), "^file:/*", "/"))
         .withColumn("_pos", col("_metadata.row_index"))
@@ -566,41 +539,20 @@ object Engine {
           tbl.spark.read.schema(tbl.deleteSchema)
             .parquet(dels.map(_.path): _*),
           Seq("file_path", "pos"), "left_anti")
-      val staging = Paths.get(tbl.dir, s".staging-${UUID.randomUUID()}")
       // scale the delete-file write with the table: hash-partition on the
       // data-file path so a mass delete fans out across the cluster (one
       // task would serialize a 100 TB-table delete), and keep each delete
       // file sorted by (file_path, pos) as the Iceberg v2 spec requires
       val nParts = math.max(1, math.min(candidates.size / 4 + 1,
         tbl.spark.sparkContext.defaultParallelism))
-      pos.repartition(nParts, col("file_path"))
-        .sortWithinPartitions("file_path", "pos")
-        .write.parquet(staging.toString)
-      val dataDir = MetadataIO.dataDir(tbl.dir)
-      val movedDel = scala.collection.mutable.ListBuffer[String]()
-      val stream = Files.walk(staging)
-      try stream.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).foreach { p =>
-          val dest = dataDir.resolve(s"delete-${UUID.randomUUID()}.parquet")
-          Files.move(p, dest, StandardCopyOption.ATOMIC_MOVE)
-          movedDel += dest.toString
-        }
-      finally stream.close()
-      deleteRecursively(staging)
-      val footers = ParquetStats.readMany(tbl.spark, movedDel.toSeq)
-      for (path <- movedDel) {
-        val footer = footers(path)
-        if (footer.rowCount > 0) {
-          added = DataFile(path, footer.rowCount,
-            footer.sizeBytes, Map.empty, footer.stats,
-            content = Some(1)) :: added
-          posCount += footer.rowCount
-        } else Files.delete(Paths.get(path))
-      }
+      publish(tbl.dir, pos.repartition(nParts, col("file_path"))
+          .sortWithinPartitions("file_path", "pos"), "delete-")
+        .map { case (path, _, footer) => DataFile(path, footer.rowCount,
+          footer.sizeBytes, Map.empty, footer.stats, content = Some(1)) }
     }
     commitSnapshot(tbl, "delete-mor", fullPaths, added)
     DmlResult(0, fullMatch.size, data.size - fullMatch.size,
-      fullMatch.map(_.rowCount).sum + posCount)
+      fullMatch.map(_.rowCount).sum + added.map(_.rowCount).sum)
   }
 
   /** Equality DELETE (Iceberg v2 content=2): write the delete KEYS, not
@@ -632,9 +584,8 @@ object Engine {
     // grow the delete file, sorted keys give the tight per-file stats
     // the flush pruner refutes with, and the distinct's own hash
     // shuffle IS the key partitioning (no second exchange). Field-id
-    // metadata rides the select (the writeRaw pattern) so external
-    // field-id readers resolve the delete columns.
-    tbl.spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+    // metadata rides the select so external field-id readers resolve the
+    // delete columns.
     // coalesce bounds the delete-file fan-out when the session runs a
     // high spark.sql.shuffle.partitions: a small key batch must not
     // scatter into hundreds of tiny files every read then anti-joins
@@ -646,36 +597,15 @@ object Engine {
       .distinct()
       .coalesce(nOut)
       .sortWithinPartitions(keyCols.map(col): _*)
-    val staging = Paths.get(tbl.dir, s".staging-${UUID.randomUUID()}")
-    distinctKeys.write.parquet(staging.toString)
-    val dataDir = MetadataIO.dataDir(tbl.dir)
-    val moved = scala.collection.mutable.ListBuffer[String]()
-    val stream = Files.walk(staging)
-    try stream.iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".parquet")).foreach { p =>
-        val dest = dataDir.resolve(s"eqdelete-${UUID.randomUUID()}.parquet")
-        Files.move(p, dest, StandardCopyOption.ATOMIC_MOVE)
-        moved += dest.toString
-      }
-    finally stream.close()
-    deleteRecursively(staging)
-    var added: List[DataFile] = Nil
-    var keyCount = 0L
-    val footers = ParquetStats.readMany(tbl.spark, moved.toSeq)
-    for (path <- moved) {
-      val footer = footers(path)
-      if (footer.rowCount > 0) {
-        added = DataFile(path, footer.rowCount, footer.sizeBytes,
-          Map.empty, footer.stats, content = Some(2),
-          equalityIds = Some(eqIds)) :: added
-        keyCount += footer.rowCount
-      } else Files.delete(Paths.get(path))
-    }
+    val added = publish(tbl.dir, distinctKeys, "eqdelete-")
+      .map { case (path, _, footer) => DataFile(path, footer.rowCount,
+        footer.sizeBytes, Map.empty, footer.stats, content = Some(2),
+        equalityIds = Some(eqIds)) }
     val dataFiles = tbl.liveFiles.count(!_.isAnyDelete)
     // an empty key batch (routine in streaming upsert) commits nothing:
     // snapshot-per-empty-batch would churn the log for no state change
     if (added.nonEmpty) commitSnapshot(tbl, "delete-eq", Set.empty, added)
-    DmlResult(0, 0, dataFiles, keyCount)
+    DmlResult(0, 0, dataFiles, added.map(_.rowCount).sum)
   }
 
   /** Streaming upsert: equality-delete the incoming rows' keys, then
@@ -766,8 +696,7 @@ object Engine {
         (eqDels.nonEmpty && eqAffects(f)))
     val newFiles = rewrite.groupBy(_.partition).toList.flatMap {
       case (partition, group) =>
-        val raw = tbl.spark.read.schema(tbl.schema)
-          .parquet(group.map(_.path): _*)
+        val raw = tbl.readData(group)
         val posApplied =
           if (dels.isEmpty) raw else tbl.applyPositionDeletes(raw, dels)
         val all =
@@ -790,7 +719,7 @@ object Engine {
     val (mustRead, _, _) = Pruning.partitionFiles(
       Some(GraftBridge.resolvePredicate(tbl.spark, tbl.schema, pred)),
       tbl.schema, tbl.meta.partitionSpec, files)
-    val matches = filesWithMatches(tbl, mustRead, pred)
+    val matches = filesWithMatches(tbl, mustRead, _.filter(pred))
     val rewrite = mustRead.filter(f => matches.contains(normPath(f.path)))
     val untouched = files.filterNot(f => matches.contains(normPath(f.path)))
     val cols = tbl.schema.fieldNames
@@ -818,48 +747,23 @@ object Engine {
   private def rewriteGroups(tbl: LakeTable, files: List[DataFile],
       f: DataFrame => DataFrame,
       assigned: Iterable[String] = Nil): List[DataFile] = {
-    def read(fs: List[DataFile]) =
-      tbl.spark.read.schema(tbl.schema).parquet(fs.map(_.path): _*)
     lazy val sourceCols = tbl.meta.partitionSpec.map(_.column).toSet
-    if (assigned.exists(c => sourceCols(c))) writeFiles(tbl, f(read(files)))
+    if (assigned.exists(c => sourceCols(c)))
+      writeFiles(tbl, f(tbl.readData(files)))
     else files.groupBy(_.partition).toList.flatMap {
-      case (partition, group) => writeRaw(tbl, f(read(group)), partition)
+      case (partition, group) =>
+        writeRaw(tbl, f(tbl.readData(group)), partition)
     }
   }
 
   /** Write a dataframe as plain files tagged with fixed partition values
     * (used by rewrites, where partition membership is already decided). */
   private def writeRaw(tbl: LakeTable, df: DataFrame,
-      partition: Map[String, String]): List[DataFile] = {
-    val staging = Paths.get(tbl.dir, s".staging-${UUID.randomUUID()}")
-    val dataDir = MetadataIO.dataDir(tbl.dir)
-    Files.createDirectories(dataDir)
-    // rewrites must carry field ids too, or id-matched reads null them out
-    tbl.spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    val withIds = df.select(tbl.schema.fields.map(f =>
-      col(s"`${f.name}`").as(f.name, f.metadata)): _*)
-    withIds.write.option("compression", "snappy").parquet(staging.toString)
-    val movedRaw = scala.collection.mutable.ListBuffer[String]()
-    val stream = Files.walk(staging)
-    try {
-      stream.iterator().asScala
-        .filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .foreach { p =>
-          val dest = dataDir.resolve(s"${UUID.randomUUID()}.parquet")
-          Files.move(p, dest, StandardCopyOption.ATOMIC_MOVE)
-          movedRaw += dest.toString
-        }
-    } finally stream.close()
-    deleteRecursively(staging)
-    val footers = ParquetStats.readMany(tbl.spark, movedRaw.toSeq)
-    movedRaw.toList.flatMap { path =>
-      val footer = footers(path)
-      if (footer.rowCount > 0)
-        Some(DataFile(path, footer.rowCount, footer.sizeBytes, partition,
-          footer.stats))
-      else { Files.delete(Paths.get(path)); None }
+      partition: Map[String, String]): List[DataFile] =
+    publish(tbl.dir, withFieldIds(tbl, df), "").map {
+      case (path, _, footer) => DataFile(path, footer.rowCount,
+        footer.sizeBytes, partition, footer.stats)
     }
-  }
 
   // ---------------------------------------------------------- maintenance
 
@@ -880,10 +784,7 @@ object Engine {
         rounds += 1
         val nOut = math.max(1,
           math.ceil(small.map(_.sizeBytes).sum.toDouble / targetBytes).toInt)
-        val df = tbl.spark.read.schema(tbl.schema)
-          .parquet(small.map(_.path): _*)
-          .coalesce(nOut)
-        added ++= writeRaw(tbl, df, partition)
+        added ++= writeRaw(tbl, tbl.readData(small).coalesce(nOut), partition)
         removedPaths ++= small.map(_.path)
       } else keep ++= group
     }
@@ -946,8 +847,7 @@ object Engine {
     val added = scala.collection.mutable.ListBuffer[DataFile]()
     val removedPaths = scala.collection.mutable.Set[String]()
     for ((partition, group) <- files.groupBy(_.partition).toList) {
-      val df = tbl.spark.read.schema(tbl.schema)
-        .parquet(group.map(_.path): _*)
+      val df = tbl.readData(group)
       val nOut =
         if (numFiles > 0) numFiles
         else math.max(1, math.ceil(

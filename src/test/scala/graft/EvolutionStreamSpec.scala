@@ -57,6 +57,49 @@ class EvolutionStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(tbl.toDF.count() == r.count() + 1)
   }
 
+  test("rewrites after rename or drop+re-add resolve columns by field id " +
+      "in a session that never read the table") {
+    // every step runs on a fresh session, so no earlier toDF has set a
+    // read flag the rewrite could lean on
+    def fresh(dir: String): LakeTable = LakeTable.load(spark.newSession(), dir)
+    def make(): String = {
+      val dir = tmp()
+      val s = spark.newSession()
+      Engine.ctas(s, dir, s.range(100).repartition(2)
+        .select(col("id").as("a"), (col("id") * 10).as("b"), lit(1).as("x")))
+      dir
+    }
+    def pairs(tbl: LakeTable, c: String): Seq[(Long, Any)] =
+      tbl.toDF.select("a", c).collect().toSeq
+        .map(r => (r.getLong(0), r.get(1))).sortBy(_._1)
+    val expected: Seq[(Long, Any)] = (0L until 100L).map(i => (i, i * 10))
+
+    // rename, then compact: the renamed column keeps its values
+    val renamed = make()
+    Engine.renameColumn(fresh(renamed), "b", "c")
+    assert(Engine.compact(fresh(renamed)) == 1)
+    assert(pairs(fresh(renamed), "c") == expected)
+
+    // rename, then a COW update: rewritten files keep the renamed column
+    val updated = make()
+    Engine.renameColumn(fresh(updated), "b", "c")
+    val res = Engine.update(fresh(updated), col("a") < 50,
+      Map("a" -> col("a")))
+    assert(res.rewrittenFiles > 0)
+    assert(pairs(fresh(updated), "c") == expected)
+
+    // drop + re-add under the same name (a fresh field id, since b is not
+    // the highest): the new column starts empty and compaction must not
+    // resurrect the dropped column's values
+    val readded = make()
+    Engine.dropColumn(fresh(readded), "b")
+    Engine.addColumn(fresh(readded), "b", "BIGINT")
+    assert(Engine.compact(fresh(readded)) == 1)
+    val t = fresh(readded)
+    assert(t.toDF.count() == 100)
+    assert(t.toDF.filter(col("b").isNotNull).count() == 0)
+  }
+
   test("alter column type: widening reads old files, writes new type") {
     val dir = tmp()
     val li = Tables.load(spark, sf, "lineitem")

@@ -165,11 +165,31 @@ class IcebergInteropSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ids == Seq(1L, 3L, 4L, 5L, 6L, 7L, 8L, 9L, 10L)) // only 2 gone
     // adoption rewrites the equality deletes into position deletes and
     // matches the scan exactly — the sequence rule included (id=7 lives)
-    val adopted = Engine.importIceberg(spark, dir,
-      Files.createTempDirectory("eqadopt").toString + "/t")
+    val tmpRoot = Paths.get(System.getProperty("java.io.tmpdir"))
+    def adoptDelDirs(): Set[String] = {
+      val ls = Files.list(tmpRoot)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("adoptdel")).toSet
+      finally ls.close()
+    }
+    val adoptDelBefore = adoptDelDirs()
+    val dest = Files.createTempDirectory("eqadopt").toString + "/t"
+    val adopted = Engine.importIceberg(spark, dir, dest)
     val adoptedIds = adopted.toDF
       .select("id").collect().map(_.getLong(0)).sorted.toSeq
     assert(adoptedIds == ids)
+    // adoption stages its delete file inside the destination table and
+    // leaves nothing behind: no tmpdir scratch, no unreferenced file
+    assert(adoptDelDirs() == adoptDelBefore)
+    val onDisk = {
+      val w = Files.walk(Paths.get(dest))
+      try w.iterator().asScala.filter(Files.isRegularFile(_))
+        .filterNot(_.startsWith(MetadataIO.metaDir(dest)))
+        .map(_.toString).toSet
+      finally w.close()
+    }
+    assert(onDisk == adopted.liveFiles.map(_.path)
+      .filter(_.startsWith(dest)).toSet)
     // the engine's own DML applies on top of the converted deletes
     val res = Engine.delete(adopted, col("id") === 6)
     assert(res.matchedRows == 1)

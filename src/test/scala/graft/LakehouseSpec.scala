@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -542,6 +544,49 @@ class LakehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(tbl.toDF.count() == n.count())
     val dataFiles = Files.list(MetadataIO.dataDir(tbl.dir)).count()
     assert(dataFiles == tbl.liveFiles.size)
+  }
+
+  test("deleteByKey and upsertByKey work on a table with no data yet") {
+    val n = Tables.load(spark, sf, "nation")
+    val deleted = Engine.create(spark, tmp(), n.schema.toDDL)
+    val res = Engine.deleteByKey(deleted, Seq("n_nationkey"),
+      n.filter(col("n_nationkey") < 3).select("n_nationkey"))
+    assert(res.matchedRows == 3)
+    assert(deleted.toDF.count() == 0)
+    // a streaming upsert's first batch into a brand-new table
+    val upserted = Engine.create(spark, tmp(), n.schema.toDDL)
+    Engine.upsertByKey(upserted, Seq("n_nationkey"), n)
+    assert(upserted.toDF.count() == n.count())
+  }
+
+  test("a failed insert leaves no staging dir and no change to the table") {
+    val r = Tables.load(spark, sf, "region")
+    val tbl = Engine.ctas(spark, tmp(), r)
+    val live = tbl.liveFiles.map(_.path).toSet
+    val snaps = tbl.meta.snapshots.size
+    val dataFiles = Files.list(MetadataIO.dataDir(tbl.dir)).count()
+    intercept[Exception](Engine.insert(tbl,
+      r.withColumn("r_name", raise_error(lit("boom")).cast("string"))))
+    val stray = Files.list(java.nio.file.Paths.get(tbl.dir)).iterator()
+      .asScala.map(_.getFileName.toString)
+      .filter(_.startsWith(".staging-")).toList
+    assert(stray.isEmpty, s"leftover staging dirs: $stray")
+    assert(tbl.liveFiles.map(_.path).toSet == live)
+    assert(tbl.meta.snapshots.size == snaps)
+    assert(Files.list(MetadataIO.dataDir(tbl.dir)).count() == dataFiles)
+    assert(tbl.toDF.count() == r.count())
+  }
+
+  test("an empty unpartitioned insert or ctas commits no 0-row file") {
+    val empty = Tables.load(spark, sf, "region").limit(0)
+    val tbl = Engine.ctas(spark, tmp(), empty)
+    assert(tbl.meta.snapshots.map(_.operation) == List("create", "append"))
+    assert(tbl.liveFiles.isEmpty)
+    Engine.insert(tbl, empty)
+    assert(tbl.meta.snapshots.size == 3)
+    assert(tbl.liveFiles.isEmpty)
+    assert(tbl.toDF.count() == 0)
+    assert(tbl.toDF.schema.fieldNames.toSeq == empty.schema.fieldNames.toSeq)
   }
 
   test("truncate is metadata-only and time-travelable") {
